@@ -5,11 +5,14 @@ object Bench {
   /** One full timed pass over the query registry plus its interleaved
     * load probes — the unit the contention-retry loop below re-runs.
     * `perQuery` rows are (name, raw seconds, segment load factor,
-    * normalized seconds).
+    * normalized seconds) of the queries that completed; `failed` rows are
+    * (name, raw seconds, error) of those that threw, kept out of every
+    * total so a fast crash never reads as a speedup.
     */
-  private case class Sweep(perQuery: Seq[(String, Double, Double, Double)],
+  private[graft] case class Sweep(perQuery: Seq[(String, Double, Double, Double)],
       probes: Seq[(Int, Double)], calPre: Double, calPost: Double,
-      warm: Seq[(String, Double)] = Seq.empty) {
+      warm: Seq[(String, Double)],
+      failed: Seq[(String, Double, String)]) {
     val total: Double = perQuery.map(_._2).sum
     val normTotal: Double = perQuery.map(_._4).sum
     val calMin: Double = probes.map(_._2).min
@@ -33,7 +36,7 @@ object Bench {
     }
   }
 
-  private object Sweep {
+  private[graft] object Sweep {
     /** Quiet-box baseline = SECOND-smallest probe: a single anomalously
       * FAST probe (scheduler luck on a short fixed job) would otherwise
       * lower the baseline and inflate every query's load factor,
@@ -49,6 +52,61 @@ object Bench {
       val s = xs.sorted
       if (s.length < 3) s.head else s(1)
     }
+
+    /** Builds a sweep from its queries in run order, (name, raw seconds,
+      * error if the query threw). Normalization baseline = the robust
+      * quiet value this run saw (second-smallest probe — see `baseline`).
+      * Each query is assigned the load factor of the first probe at/after
+      * its position. If the whole run was uniformly contended the baseline
+      * is contended too and norm stays honest (it can't invent a quiet
+      * box it never saw); the absolute cal values still expose that case.
+      * Failed queries keep their position for the factor lookup, then
+      * move to `failed`.
+      */
+    def account(raw: Seq[(String, Double, Option[String])],
+        probes: Seq[(Int, Double)], calPre: Double, calPost: Double,
+        warm: Seq[(String, Double)]): Sweep = {
+      val base = baseline(probes.map(_._2))
+      val rows = raw.zipWithIndex.map { case ((name, sec, err), i) =>
+        val seg = probes.find(_._1 >= i + 1).getOrElse(probes.last)._2
+        val factor = math.max(1.0, seg / base)
+        ((name, sec, factor, sec / factor), err)
+      }
+      Sweep(rows.collect { case (q, None) => q }, probes, calPre, calPost,
+        warm, rows.collect { case ((n, sec, _, _), Some(e)) => (n, sec, e) })
+    }
+  }
+
+  /** A JSON string literal. */
+  private[graft] def jsonStr(v: String): String = {
+    val b = new StringBuilder("\"")
+    v.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  /** One line naming a throwable: class and the first line of its message,
+    * capped so a Spark plan dump does not flood the detail file.
+    */
+  private[graft] def describe(e: Throwable): String = {
+    val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse("")
+    s"${e.getClass.getName}: $msg".take(300)
+  }
+
+  /** The detail file's failure keys: each failed query with its seconds
+    * and error, and every swallowed set-up or warm-up error.
+    */
+  private[graft] def failureJson(failed: Seq[(String, Double, String)],
+      errors: Seq[String]): String = {
+    val fs = failed.map { case (k, sec, e) =>
+      jsonStr(k) + ":" + f"""{"raw":$sec%.3f,"error":""" + jsonStr(e) + "}"
+    }.mkString("{", ",", "}")
+    s""""failed":$fs,"errors":${errors.map(jsonStr).mkString("[", ",", "]")}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -78,6 +136,14 @@ object Bench {
     })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // errors the bench survives (warm-ups); each goes to stderr at once and
+    // into the detail file, so a broken warm-up cannot pass unseen
+    val errors = scala.collection.mutable.ArrayBuffer[String]()
+    def report(where: String, e: Throwable): Unit = {
+      val msg = s"$where: ${describe(e)}"
+      System.err.println(s"BENCH error $msg")
+      errors += msg
+    }
     // warm-up: JVM/codegen/scheduler initialization and table registration
     // should not be billed to whichever query happens to run first
     try {
@@ -91,7 +157,7 @@ object Bench {
       // the billed total, later queries just stop re-decoding parquet
       graft.sources.Tables.names.foreach(n => spark.table(n).cache())
       spark.table("lineitem").limit(1000).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => report("warm-up", e) }
     // NOTE on intra-sweep caching: the dedup/similarity family builds
     // plan-identical persisted intermediates (shingle/bucket tables), and
     // Spark's cache-manager canonicalization shares one entry across
@@ -152,7 +218,7 @@ object Bench {
     val calEvery = 15
     val heavyProbeSec = 3.0
 
-    def runSweep(): Sweep = {
+    def runSweep(attempt: Int): Sweep = {
       val calPre = calibrate()
       val probes = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
       probes += ((0, calPre))
@@ -184,15 +250,19 @@ object Bench {
               spark.table(n).cache(); spark.table(n).count()
             }
             SparkEntry.familyWarm.get(family).foreach { w =>
-              try w(spark, sfDir) catch { case _: Throwable => }
+              try w(spark, sfDir)
+              catch { case e: Throwable => report(s"familyWarm $family (attempt $attempt)", e) }
             }
             warmSec += ((family, (System.nanoTime() - w0) / 1e9))
           }
           lastFamily = family
           qIdx += 1
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+          val err =
+            try { fn(spark, sfDir).count(); None }
+            catch { case e: Throwable => Some(describe(e)) }
           val sec = (System.nanoTime() - t0) / 1e9
+          err.foreach(e => System.err.println(s"BENCH query $name FAILED: $e"))
           // untimed: release this query's localCheckpoint blocks — they
           // are RDD-level persists INVISIBLE to the family-boundary
           // clearCache (checkpoints bypass CacheManager) and never shared
@@ -219,23 +289,11 @@ object Bench {
           // <2% of the sweep.
           if (qIdx % calEvery == 0 || sec > heavyProbeSec)
             probes += ((qIdx, calibrate()))
-          name -> sec
+          (name, sec, err)
         }
       val calPost = calibrate()
       if (probes.last._1 != qIdx) probes += ((qIdx, calPost))
-      // Normalization baseline = the robust quiet value this run saw
-      // (second-smallest probe — see Sweep.baseline). Each query is
-      // assigned the load factor of the first probe at/after its
-      // position. If the whole run was uniformly contended the baseline
-      // is contended too and norm stays honest (it can't invent a quiet
-      // box it never saw); the absolute cal values still expose that case.
-      val base = Sweep.baseline(probes.map(_._2).toSeq)
-      val perQuery = raw.zipWithIndex.map { case ((name, sec), i) =>
-        val seg = probes.find(_._1 >= i + 1).getOrElse(probes.last)._2
-        val factor = math.max(1.0, seg / base)
-        (name, sec, factor, sec / factor)
-      }
-      Sweep(perQuery, probes.toSeq, calPre, calPost, warmSec.toSeq)
+      Sweep.account(raw, probes.toSeq, calPre, calPost, warmSec.toSeq)
     }
 
     def appendHistory(s: Sweep, attempt: Int): Unit = {
@@ -253,7 +311,8 @@ object Bench {
         .mkString("[", ",", "]")
       try {
         val h = new java.io.FileWriter("BENCH_HISTORY.jsonl", true)
-        h.write(s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","attempt":$attempt,"total":${f"${s.total}%.3f"},"total_norm":${f"${s.normTotal}%.3f"},"n_queries":${s.perQuery.size},"cal_ratio":${f"${s.calRatio}%.3f"},"cal_probes":$probesJson,"queries":$detail}""" + "\n")
+        val failed = s.failed.map(f => jsonStr(f._1)).mkString("[", ",", "]")
+        h.write(s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","attempt":$attempt,"total":${f"${s.total}%.3f"},"total_norm":${f"${s.normTotal}%.3f"},"n_queries":${s.perQuery.size},"cal_ratio":${f"${s.calRatio}%.3f"},"cal_probes":$probesJson,"queries":$detail,"failed":$failed}""" + "\n")
         h.close()
       } catch { case _: Throwable => }
     }
@@ -337,7 +396,7 @@ object Bench {
     val attempts = scala.collection.mutable.ArrayBuffer[Sweep]()
     var go = true
     while (go) {
-      val s = runSweep()
+      val s = runSweep(attempts.size + 1)
       attempts += s
       appendHistory(s, attempts.size)
       go = s.calRatio > 1.5 && attempts.size < maxAttempts
@@ -355,7 +414,7 @@ object Bench {
         .map { case (k, vs) => (k, vs.map(_._2).min) }
     if (attempts.size == 1 && regressionsFor(normMins(attempts.toSeq))
         .nonEmpty) {
-      val s = runSweep()
+      val s = runSweep(attempts.size + 1)
       attempts += s
       appendHistory(s, attempts.size)
     }
@@ -388,7 +447,7 @@ object Bench {
     // every attempt agrees; totals still come from one coherent attempt).
     val normByQuery = attempts.flatMap(_.perQuery.map(q => (q._1, q._4)))
       .groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }
-    val detail = best.perQuery.map { case (k, raw, factor, norm) =>
+    val detail = (best.perQuery.map { case (k, raw, factor, norm) =>
       val ns = normByQuery(k)
       val mn = ns.min
       // 1e-3 s floor (ADVICE r13): a sub-millisecond norm_min is timer
@@ -396,7 +455,7 @@ object Bench {
       val spread = ns.max / math.max(mn, 1e-3)
       s"\"" + k + "\":" +
         f"""{"raw":$raw%.3f,"factor":$factor%.3f,"norm":$norm%.3f,"norm_min":$mn%.3f,"spread":$spread%.2f}"""
-    }.mkString("{", ",", "}")
+    } :+ failureJson(best.failed, errors.toSeq)).mkString("{", ",", "}")
     println(s"BENCH_DETAIL $detail")
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json")
@@ -444,7 +503,7 @@ object Bench {
     val warmJson = best.warm.sortBy(_._1)
       .map { case (f2, s2) => s"\"" + f2 + "\":" + f"$s2%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"${best.total}%.3f"},"unit":"sec","value_norm":${f"${best.normTotal}%.3f"},"n_queries":${best.perQuery.size},"queries":$fam,"cal_pre":${f"${best.calPre}%.3f"},"cal_post":${f"${best.calPost}%.3f"},"cal_min":${f"${best.calMin}%.3f"},"cal_max":${f"${best.calMax}%.3f"},"cal_ratio":${f"${best.calRatio}%.3f"},"attempts":${attempts.size},"attempt_totals":$attTotals,"attempt_norm_totals":$attNorm,"contended":$contended,"regressed":${regressions.size},"cpus":$cpus,"warm":$warmJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f"${best.total}%.3f"},"unit":"sec","value_norm":${f"${best.normTotal}%.3f"},"n_queries":${best.perQuery.size},"queries":$fam,"cal_pre":${f"${best.calPre}%.3f"},"cal_post":${f"${best.calPost}%.3f"},"cal_min":${f"${best.calMin}%.3f"},"cal_max":${f"${best.calMax}%.3f"},"cal_ratio":${f"${best.calRatio}%.3f"},"attempts":${attempts.size},"attempt_totals":$attTotals,"attempt_norm_totals":$attNorm,"contended":$contended,"regressed":${regressions.size},"cpus":$cpus,"warm":$warmJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","failed":${best.failed.size}}""")
     spark.stop()
   }
 }

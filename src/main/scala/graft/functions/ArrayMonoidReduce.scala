@@ -33,6 +33,10 @@ import scala.reflect.runtime.universe.TypeTag
   * Buffer is a primitive `Array[T]` (compact shuffle representation; the
   * reference's `Vec<T::Native>`, `src/monoid.rs:341`); empty array encodes
   * the "not yet sized" state.
+  *
+  * Invariant: Spark's encoder passes each `Seq` input as a linked `List`
+  * (`scala.collection.immutable.::` of `Some`), so `reduce` traverses it
+  * and never indexes it — `arr(j)` would make a width-w row cost O(w²).
   */
 class ArrayMonoidReduce[T](val m: Monoid[T])(implicit tt: TypeTag[T], ct: ClassTag[T])
     extends Aggregator[Seq[Option[T]], Array[T], Seq[T]] {
@@ -40,17 +44,21 @@ class ArrayMonoidReduce[T](val m: Monoid[T])(implicit tt: TypeTag[T], ct: ClassT
   override def zero: Array[T] = Array.empty[T]
 
   /** `add_array` (reference `src/monoid.rs:360-378`). Mutates and returns the
-    * buffer (safe for Aggregator semantics).
+    * buffer (safe for Aggregator semantics). One forward pass over `arr`'s
+    * iterator, stopping at the buffer length (truncation); a shorter `arr`
+    * leaves the tail as it was. Elements fold in ascending index order,
+    * which keeps `_float` folds bit-exact.
     */
   override def reduce(buf: Array[T], arr: Seq[Option[T]]): Array[T] = {
     if (arr == null) return buf // null row: skip (src/monoid.rs:432-434)
     val b =
       if (buf.length == 0 && arr.nonEmpty) Array.fill(arr.length)(m.identity)
       else buf
-    val n = math.min(arr.length, b.length) // truncate longer arrays
+    val n = b.length
+    val it = arr.iterator
     var j = 0
-    while (j < n) {
-      val v = arr(j)
+    while (j < n && it.hasNext) {
+      val v = it.next()
       if (v.isDefined) b(j) = m.combine(b(j), v.get) // null element: identity
       j += 1
     }

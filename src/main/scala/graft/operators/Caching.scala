@@ -158,31 +158,6 @@ object Caching {
     }
   }
 
-  /** Periodic lineage truncation for iterative loops: [[checkpoint]] on
-    * every `every`-th round, plain [[persist]] between.
-    *
-    * STATUS (round 10): no longer used by the shipped operators — kept as
-    * the documented middle rung of the truncation ladder for callers whose
-    * per-round frame is expensive to MATERIALIZE (where skipping rounds of
-    * checkpoint I/O genuinely saves jobs). For the node-sized loop frames
-    * the graph/PCA operators carry, the round-10 A/B (Scratch6
-    * construct+count at sf0.1/32) measured per-round [[checkpoint]]
-    * FASTER than this cadence at every call site it had: hits 0.9 vs
-    * 2.1-3.9 s, BFS 1.9 vs 5.0 s, SSSP 1.8 vs 2.8 s, kCore 2.1 vs 3.2 s,
-    * pcaPower ~6 vs ~8 s. The r9 rationale ("each checkpoint call is a
-    * full planner pass") compared per-round checkpoints against NO
-    * truncation; it missed that [[persist]] ALSO plans at call time
-    * (CacheManager.cacheQuery), and that between truncations each pass
-    * plans a k×-per-round-bigger tree while executors re-read
-    * InMemoryRelation scans instead of a flat LogicalRDD. Net: planner
-    * passes are per-round either way, and the flat base wins.
-    */
-  private[graft] def truncateEvery(df: DataFrame, round: Int,
-      every: Int = 4, eager: Boolean = false): DataFrame = {
-    require(every >= 1)
-    if (round % every == 0) checkpoint(df, eager) else persist(df)
-  }
-
   /** Run `f`, then unpersist every [[persist]] this thread's operators
     * registered while it ran. Blocking unpersist: storage is actually gone
     * when `scoped` returns, so back-to-back scopes can't transiently hold

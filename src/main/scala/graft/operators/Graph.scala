@@ -39,9 +39,9 @@ object Graph {
   val TruncateRounds: Int = 8
 
   /** [[Caching.checkpoint]] on every [[TruncateRounds]]-th round, plain
-    * lazy composition between (NOT [[Caching.truncateEvery]], whose
-    * between-round persist pays a planning pass per round for nothing
-    * when the frame is referenced once).
+    * lazy composition between (no persist between checkpoints: it would
+    * pay a planning pass per round for nothing when the frame is
+    * referenced once).
     */
   private def truncate(df: DataFrame, round: Int): DataFrame =
     if (round % TruncateRounds == 0) Caching.checkpoint(df) else df
@@ -1030,8 +1030,8 @@ object Graph {
     // Per-round CHECKPOINT of auths, measured best (round-10 A/B at
     // sf0.1/32, Scratch warm reps — COUNT phase; construction adds ~3 s
     // in bench context either way, Scratch6): this r9 shape executes in
-    // 0.88-1.17 s; swapping it for truncateEvery(every=2) — fewer
-    // planner passes on paper — executed in 2.1-3.9 s, 3-4x SLOWER,
+    // 0.88-1.17 s; a checkpoint every 2nd round with a persist between —
+    // fewer planner passes on paper — executed in 2.1-3.9 s, 3-4x SLOWER,
     // because between truncations the composed tree re-executes the
     // broadcast total subtrees against InMemoryRelation scans instead
     // of a flat LogicalRDD. The flat-base-per-round shape is also why the "fuse
@@ -1207,7 +1207,8 @@ object Graph {
     * Scale shape: per round, two node-set joins against the edge table +
     * one degree aggregate — bounded shuffles; the surviving set is
     * CHECKPOINTED per round (it feeds BOTH endpoint joins, and the flat
-    * base measured faster than the r9 truncateEvery cadence — round-10
+    * base measured faster than the r9 cadence of a checkpoint every k-th
+    * round with persists between — round-10
     * Scratch6 A/B: 2.1 vs 3.2 s warm; set spark.graft.reliableCheckpoints
     * on a cluster).
     */
@@ -1453,8 +1454,8 @@ object Graph {
     * filter over the visited set (dist = level−1), so ONE frame carries
     * all loop state, and that frame is CHECKPOINTED every level: the
     * round-10 A/B (Scratch6 construct+count, sf0.1/32, warm) measured
-    * per-level checkpoint 1.8-2.0 s vs the r9 truncateEvery cadence
-    * 5.0-6.0 s — a growing tree makes each persist's own planner pass
+    * per-level checkpoint 1.8-2.0 s vs the r9 cadence of a checkpoint
+    * every k-th level with persists between, 5.0-6.0 s — a growing tree makes each persist's own planner pass
     * cost more than a checkpoint's flat-base pass, the same finding as
     * [[hits]] (r9's "checkpoints are per-round planner passes" doctrine
     * compared against NO truncation, not against cadenced persists whose
@@ -1968,8 +1969,8 @@ object Graph {
     * distance table against the flat checkpointed edge table + one
     * min-aggregate; the distance table is referenced twice per round
     * (relax join + union) and CHECKPOINTED each round — measured best
-    * (round-10 Scratch6 A/B warm: 1.8 s vs the truncateEvery cadence's
-    * 2.8 s; same finding as [[bfsDistances]]). Negative weights are not validated (that would cost
+    * (round-10 Scratch6 A/B warm: 1.8 s vs 2.8 s for a checkpoint every
+    * k-th round with persists between; same finding as [[bfsDistances]]). Negative weights are not validated (that would cost
     * a scan): min-plus stays well-defined under the hop bound, but the
     * result then depends on `maxHops` — callers wanting classic shortest
     * paths should pass non-negative weights.

@@ -60,6 +60,58 @@ class ArrayReduceAggSpec extends SparkSpec {
       == Seq(315, 321, 327))
   }
 
+  // Wide rows stress the per-element fold of both tiers (the Aggregator
+  // reads a linked List, the native tier ArrayData). Sums, maxima and
+  // minima use mixed-sign ints that never overflow, except slot 0, which
+  // is positive so its saturation does not depend on merge order; the
+  // product column stays in {-1, 1, 2} for the same reason.
+  test("wide arrays with null elements: tiers agree across 4 partitions") {
+    val w = 512
+    val rows = (0 until 64).map { i =>
+      def isNull(j: Int) = (i * 31 + j) % 11 == 0
+      val a = (0 until w).map { j =>
+        if (isNull(j)) None
+        else if (j == 0) Some(Int.MaxValue / 3)
+        else Some((i * 7919 + j * 104729) % 2001 - 1000)
+      }
+      val p = (0 until w).map { j =>
+        if (isNull(j)) None
+        else if (j == 0) Some(1000)
+        else if (i % 16 == j % 16) Some(2)
+        else if ((i + j) % 13 == 0) Some(-1)
+        else Some(1)
+      }
+      val d = (0 until w).map { j =>
+        if (isNull(j)) None
+        else Some(1.0 + ((i * 37 + j * 11) % 2001 - 1000) * 1e-6)
+      }
+      (a, p, d)
+    }
+    val df = rows.toDF("a", "p", "d").repartition(4)
+    assert(df.rdd.getNumPartitions == 4)
+    df.createOrReplaceTempView("t_wide")
+    def tiers[T](op: String, c: String, suffix: String): (Seq[T], Seq[T]) = {
+      val r = spark.sql(s"SELECT array_reduce_${op}_native($c), " +
+        s"array_reduce_${op}_$suffix($c) FROM t_wide").collect()(0)
+      (r.getSeq[T](0), r.getSeq[T](1))
+    }
+    for ((op, c) <- Seq("sum" -> "a", "product" -> "p", "max" -> "a", "min" -> "a")) {
+      val (native, agg) = tiers[Int](op, c, "int")
+      assert(native.length == w, s"op=$op")
+      assert(native == agg, s"op=$op")
+      if (op == "sum" || op == "product")
+        assert(native.head == Int.MaxValue, s"op=$op slot 0 saturates")
+    }
+    for (op <- Seq("sum", "product", "max", "min")) {
+      val (native, agg) = tiers[Double](op, "d", "double")
+      assert(native.length == w, s"op=$op")
+      native.zip(agg).zipWithIndex.foreach { case ((n, g), j) =>
+        assert(math.abs(n - g) <= 1e-9 * math.max(1.0, math.abs(g)),
+          s"op=$op slot $j: native $n vs Aggregator $g")
+      }
+    }
+  }
+
   test("native GROUP BY + Column API") {
     val df = Seq(("a", Seq(1, 2)), ("a", Seq(10, 20)), ("b", Seq(5, 5))).toDF("k", "arrays")
     val got = df.groupBy(col("k"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{ArrayMonoidReduce, Monoid}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -165,6 +166,40 @@ class ArrayReduceSpec extends SparkSpec {
     dfS.createOrReplaceTempView("test_s")
     assert(spark.sql("SELECT array_reduce_sum_short(arrays) AS r FROM test_s")
       .collect()(0).getSeq[Short](0) == Seq[Short](32767, 500))
+  }
+
+  // Spark hands the Aggregator each array as a linked List, so `reduce`
+  // must walk it once and never index it (an indexed loop is O(width²)
+  // per row). A Seq whose `apply` throws pins "traverse, never index".
+  test("reduce walks each input once, never indexes it") {
+    def noIndex(xs: Seq[Option[Int]]): Seq[Option[Int]] =
+      new scala.collection.immutable.AbstractSeq[Option[Int]] {
+        def apply(i: Int): Option[Int] = fail(s"reduce indexed element $i")
+        def length: Int = xs.length
+        def iterator: Iterator[Option[Int]] = xs.iterator
+      }
+    val agg = new ArrayMonoidReduce[Int](Monoid.sumInt)
+    val w = 1024
+    val rows: Seq[List[Option[Int]]] = Seq(
+      List.tabulate(w)(j => if (j % 7 == 0) None else Some(j)),
+      // longer than the buffer: truncated at w
+      List.tabulate(w + 300)(j => if (j % 5 == 0) None else Some(2 * j)),
+      // shorter than the buffer: the tail keeps its prior value
+      List.tabulate(w / 2)(j => Some(-j)),
+      null,
+    )
+    val expected = Array.fill(w)(0)
+    rows.filter(_ != null).foreach { r =>
+      r.zipWithIndex.foreach { case (v, j) =>
+        if (j < w) expected(j) += v.getOrElse(0)
+      }
+    }
+    val viaList = rows.foldLeft(agg.zero)(agg.reduce)
+    assert(viaList.toSeq == expected.toSeq)
+    val viaNoIndex = rows.foldLeft(agg.zero) { (b, r) =>
+      agg.reduce(b, if (r == null) null else noIndex(r))
+    }
+    assert(viaNoIndex.toSeq == expected.toSeq)
   }
 
   test("works over real parquet array column (embeddings.embedding)") {

@@ -12,9 +12,20 @@ import json
 import sys
 
 
+def load(path):
+    """Per-query seconds: norm_min of each query entry (raw floats in
+    pre-r14 files); the "failed" and "errors" keys are not queries."""
+    out = {}
+    for q, v in json.load(open(path)).items():
+        if q in ("failed", "errors"):
+            continue
+        out[q] = v["norm_min"] if isinstance(v, dict) else v
+    return out
+
+
 def main(old_path, new_path, threshold=1.5):
-    old = json.load(open(old_path))
-    new = json.load(open(new_path))
+    old = load(old_path)
+    new = load(new_path)
     for q in sorted(set(new) - set(old)):
         print(f"ADDED     {q:40s} {new[q]:7.3f}s")
     for q in sorted(set(old) - set(new)):
