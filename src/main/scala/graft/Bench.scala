@@ -7,12 +7,14 @@ object Bench {
     * `perQuery` rows are (name, raw seconds, segment load factor,
     * normalized seconds) of the queries that completed; `failed` rows are
     * (name, raw seconds, error) of those that threw, kept out of every
-    * total so a fast crash never reads as a speedup.
+    * total so a fast crash never reads as a speedup. `session` is the
+    * pass's end-to-end wall seconds: every query, family boundary and
+    * checkpoint release, with only the calibration probes left out.
     */
   private[graft] case class Sweep(perQuery: Seq[(String, Double, Double, Double)],
       probes: Seq[(Int, Double)], calPre: Double, calPost: Double,
       warm: Seq[(String, Double)],
-      failed: Seq[(String, Double, String)]) {
+      failed: Seq[(String, Double, String)], session: Double) {
     val total: Double = perQuery.map(_._2).sum
     val normTotal: Double = perQuery.map(_._4).sum
     val calMin: Double = probes.map(_._2).min
@@ -65,7 +67,7 @@ object Bench {
       */
     def account(raw: Seq[(String, Double, Option[String])],
         probes: Seq[(Int, Double)], calPre: Double, calPost: Double,
-        warm: Seq[(String, Double)]): Sweep = {
+        warm: Seq[(String, Double)], session: Double): Sweep = {
       val base = baseline(probes.map(_._2))
       val rows = raw.zipWithIndex.map { case ((name, sec, err), i) =>
         val seg = probes.find(_._1 >= i + 1).getOrElse(probes.last)._2
@@ -73,7 +75,8 @@ object Bench {
         ((name, sec, factor, sec / factor), err)
       }
       Sweep(rows.collect { case (q, None) => q }, probes, calPre, calPost,
-        warm, rows.collect { case ((n, sec, _, _), Some(e)) => (n, sec, e) })
+        warm, rows.collect { case ((n, sec, _, _), Some(e)) => (n, sec, e) },
+        session)
     }
   }
 
@@ -230,6 +233,8 @@ object Bench {
       val warmSec = scala.collection.mutable.ArrayBuffer[(String, Double)]()
       var lastFamily = ""
       var qIdx = 0
+      var probeSec = 0.0
+      val s0 = System.nanoTime()
       val raw = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
         .map { case (name, fn) =>
@@ -287,13 +292,17 @@ object Bench {
           // factor 1.06 while same-code attempts read 7.3-8.9). ~10
           // queries exceed the threshold → ~4 s of extra untimed probes,
           // <2% of the sweep.
-          if (qIdx % calEvery == 0 || sec > heavyProbeSec)
+          if (qIdx % calEvery == 0 || sec > heavyProbeSec) {
+            val p0 = System.nanoTime()
             probes += ((qIdx, calibrate()))
+            probeSec += (System.nanoTime() - p0) / 1e9
+          }
           (name, sec, err)
         }
+      val session = (System.nanoTime() - s0) / 1e9 - probeSec
       val calPost = calibrate()
       if (probes.last._1 != qIdx) probes += ((qIdx, calPost))
-      Sweep.account(raw, probes.toSeq, calPre, calPost, warmSec.toSeq)
+      Sweep.account(raw, probes.toSeq, calPre, calPost, warmSec.toSeq, session)
     }
 
     def appendHistory(s: Sweep, attempt: Int): Unit = {
@@ -312,7 +321,7 @@ object Bench {
       try {
         val h = new java.io.FileWriter("BENCH_HISTORY.jsonl", true)
         val failed = s.failed.map(f => jsonStr(f._1)).mkString("[", ",", "]")
-        h.write(s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","attempt":$attempt,"total":${f"${s.total}%.3f"},"total_norm":${f"${s.normTotal}%.3f"},"n_queries":${s.perQuery.size},"cal_ratio":${f"${s.calRatio}%.3f"},"cal_probes":$probesJson,"queries":$detail,"failed":$failed}""" + "\n")
+        h.write(s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","attempt":$attempt,"total":${f"${s.total}%.3f"},"total_norm":${f"${s.normTotal}%.3f"},"n_queries":${s.perQuery.size},"cal_ratio":${f"${s.calRatio}%.3f"},"cal_probes":$probesJson,"queries":$detail,"failed":$failed,"session_s":${f"${s.session}%.3f"}}""" + "\n")
         h.close()
       } catch { case _: Throwable => }
     }
@@ -455,7 +464,8 @@ object Bench {
       val spread = ns.max / math.max(mn, 1e-3)
       s"\"" + k + "\":" +
         f"""{"raw":$raw%.3f,"factor":$factor%.3f,"norm":$norm%.3f,"norm_min":$mn%.3f,"spread":$spread%.2f}"""
-    } :+ failureJson(best.failed, errors.toSeq)).mkString("{", ",", "}")
+    } :+ failureJson(best.failed, errors.toSeq) :+
+      f""""session_s":${best.session}%.3f""").mkString("{", ",", "}")
     println(s"BENCH_DETAIL $detail")
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json")
@@ -499,11 +509,12 @@ object Bench {
     // the best attempt — the work the family-isolation policy excludes
     // from query timings, now visible instead of implicit (bounded at ~15
     // keys, same as the family rollup, so the driver's 2000-char output
-    // window still holds the whole line).
+    // window still holds the whole line). "session_s" (last key, also an
+    // addition) is the best attempt's `Sweep.session`.
     val warmJson = best.warm.sortBy(_._1)
       .map { case (f2, s2) => s"\"" + f2 + "\":" + f"$s2%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"${best.total}%.3f"},"unit":"sec","value_norm":${f"${best.normTotal}%.3f"},"n_queries":${best.perQuery.size},"queries":$fam,"cal_pre":${f"${best.calPre}%.3f"},"cal_post":${f"${best.calPost}%.3f"},"cal_min":${f"${best.calMin}%.3f"},"cal_max":${f"${best.calMax}%.3f"},"cal_ratio":${f"${best.calRatio}%.3f"},"attempts":${attempts.size},"attempt_totals":$attTotals,"attempt_norm_totals":$attNorm,"contended":$contended,"regressed":${regressions.size},"cpus":$cpus,"warm":$warmJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","failed":${best.failed.size}}""")
+    println(s"""{"metric":"total","value":${f"${best.total}%.3f"},"unit":"sec","value_norm":${f"${best.normTotal}%.3f"},"n_queries":${best.perQuery.size},"queries":$fam,"cal_pre":${f"${best.calPre}%.3f"},"cal_post":${f"${best.calPost}%.3f"},"cal_min":${f"${best.calMin}%.3f"},"cal_max":${f"${best.calMax}%.3f"},"cal_ratio":${f"${best.calRatio}%.3f"},"attempts":${attempts.size},"attempt_totals":$attTotals,"attempt_norm_totals":$attNorm,"contended":$contended,"regressed":${regressions.size},"cpus":$cpus,"warm":$warmJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","failed":${best.failed.size},"session_s":${f"${best.session}%.3f"}}""")
     spark.stop()
   }
 }

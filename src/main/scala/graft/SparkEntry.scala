@@ -30,9 +30,9 @@ object SparkEntry {
       graft.queries.SourceQueries.queries
 
   /** Untimed per-family warm-ups the bench runs after each family-boundary
-    * cache clear — re-materializes CROSS-family shared intermediates the
-    * clear dropped, so a query is billed its own work, not the harness's
-    * cache policy (the eager base-table re-cache's rationale, extended).
+    * cache clear: CROSS-family intermediates only, so a query is billed its
+    * own work, not the harness's cache policy. Tables shared within one
+    * family persist on first use and need no entry.
     */
   def familyWarm: Map[String, (SparkSession, String) => Unit] =
     graft.queries.PipelineQueries.familyWarm

@@ -341,9 +341,9 @@ object ScaleQueries {
     // are weighted in practice (oracle-checked) ---
     // r15: labels come from LPA over the UNWEIGHTED coEdges tree — the
     // (src, dst) sets of coEdges and coEdgesWeighted are identical by
-    // construction (same distinct-(g,item) pass, same 2..maxGroupSize
-    // group eligibility, same per-group pair generation, both deduped —
-    // GraphSpec pins the equality), and labelPropagation reads ONLY
+    // construction (same 2..maxGroupSize distinct-item group eligibility,
+    // same per-group pairs of non-null items, both deduped — GraphSpec
+    // pins the equality), and labelPropagation reads ONLY
     // (src, dst), so the labels are value-identical while the LPA subtree
     // is now canonically the one q_graph_lpa persists: the 4-round
     // propagation runs once per family instead of twice. The weighted

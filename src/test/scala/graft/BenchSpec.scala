@@ -15,7 +15,7 @@ class BenchSpec extends AnyFunSuite {
       ("q_b_two", 2.0, None))
     // probe after query 3 reads 2x the quiet baseline
     val probes = Seq((0, 0.5), (2, 0.5), (3, 1.0))
-    val s = Bench.Sweep.account(raw, probes, 0.5, 1.0, Seq.empty)
+    val s = Bench.Sweep.account(raw, probes, 0.5, 1.0, Seq.empty, 3.5)
     assert(s.perQuery.map(_._1) == Seq("q_a_one", "q_b_two"))
     assert(s.failed == Seq(("q_a_boom", 0.01,
       "java.lang.IllegalStateException: boom")))
@@ -23,6 +23,7 @@ class BenchSpec extends AnyFunSuite {
     // q_b_two keeps its own position's factor: 2.0 s at load 2 -> 1.0 s
     assert(s.perQuery.map(_._3) == Seq(1.0, 2.0))
     assert(s.normTotal == 2.0)
+    assert(s.session == 3.5)
   }
 
   test("failure keys are valid JSON with the error text escaped") {

@@ -30,6 +30,20 @@ class GraphSpec extends SparkSpec {
     assert(e == Set((1L, 2L), (2L, 1L)))
   }
 
+  test("coEdges: a null item counts toward the cap but is never paired") {
+    // group 99: maxGroupSize distinct items plus a null is over the cap;
+    // group 7: one item plus a null has no pair; group 10 keeps its pair
+    val df = ((1L to 4L).map(i => (99L, Option(i))) ++ Seq(
+      (99L, None), (7L, Some(5L)), (7L, None),
+      (10L, Some(1L)), (10L, Some(2L)), (10L, None))).toDF("g", "item")
+    val e = Graph.coEdges(df, "g", "item", maxGroupSize = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(e == Set((1L, 2L), (2L, 1L)))
+    val w = Graph.coEdgesWeighted(df, "g", "item", maxGroupSize = 4)
+      .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(w.toSet == e)
+  }
+
   test("pageRank: uniform start sums to ~total mass, bounded floor leak") {
     // triangle + pendant: 4 nodes, mass should stay near RankScale with
     // only integer-floor leakage (< iters * n ulps of the micro-unit)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
@@ -60,6 +61,31 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val bnlj = collectWithSubqueries(plan) { case j: BroadcastNestedLoopJoinExec => j }
     assert(bnlj.isEmpty,
       "edge build and rank propagation must plan as equi-joins, not BNLJ")
+  }
+
+  test("coEdges: the first graph query's persist serves the next one, " +
+      "with no family warm-up") {
+    assert(SparkEntry.familyWarm.keySet == Set("pipeline"))
+    executed("q_graph_degree")
+    // coEdges persists on an already-cached plan as a no-op, so this
+    // lookup finds the entry q_graph_degree built, or none
+    val entry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.lookupCachedData(
+        graft.operators.Graph.coEdges(spark.table("lineitem"), "l_orderkey",
+          "l_partkey").asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+    assert(entry.exists(_.isCachedColumnBuffersLoaded),
+      "q_graph_degree must build the coEdges(lineitem) table")
+    val df = SparkEntry.queries("q_graph_pagerank")(spark, sfDir)
+    df.write.format("noop").mode("overwrite").save()
+    // pageRank persists its own tables on top of the edge table, so the
+    // edge scan sits inside their cached plans
+    def scans(p: SparkPlan): Seq[AnyRef] =
+      collectWithSubqueries(p) { case s: InMemoryTableScanExec => s.relation }
+        .flatMap(r => r.cacheBuilder +: scans(r.cachedPlan))
+    assert(scans(df.queryExecution.executedPlan)
+      .exists(b => entry.exists(_ eq b)),
+      "q_graph_pagerank must scan the coEdges(lineitem) table already built")
   }
 
   test("linkPrediction: 2-hop candidate build and anti-join are equi-joins") {

@@ -14,10 +14,11 @@ import sys
 
 def load(path):
     """Per-query seconds: norm_min of each query entry (raw floats in
-    pre-r14 files); the "failed" and "errors" keys are not queries."""
+    pre-r14 files); the "failed", "errors" and "session_s" keys are not
+    queries."""
     out = {}
     for q, v in json.load(open(path)).items():
-        if q in ("failed", "errors"):
+        if q in ("failed", "errors", "session_s"):
             continue
         out[q] = v["norm_min"] if isinstance(v, dict) else v
     return out
