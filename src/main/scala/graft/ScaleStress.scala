@@ -311,8 +311,9 @@ object ScaleStress {
     time("jl-project 10x")(
       Similarity.jlProject(e10, "vec_id", "embedding", dim = 64, outDim = 16).count())
 
-    // HITS: per half-step lineage is checkpoint-truncated — 10x edges must
-    // scale the per-round joins linearly, not re-analyze a 4^iters plan
+    // HITS: each half-step reads the previous scores once, so the rounds
+    // compose one linear lazy plan — 10x edges must scale the per-round
+    // joins linearly; the window totals stay node-sized
     def hitsRun(li: org.apache.spark.sql.DataFrame): Long =
       Graph.hits(li.select(col("l_orderkey").as("src"),
         col("l_partkey").as("dst")), iters = 3).count()

@@ -28,13 +28,14 @@ object Graph {
     */
   val RankScale: Long = 1000000000000L
 
-  /** Lineage-truncation cadence for the single-reference damped loops
-    * ([[pageRank]], [[trustRank]], [[spamMass]]): the frame is
-    * checkpointed every this-many rounds so arbitrarily deep iteration
-    * counts keep a bounded logical tree, while shallow (gate-sized) runs
-    * never pay a checkpoint. See [[pageRank]]'s docstring for the
-    * measured A/B that picked lazy-with-periodic-truncation over the
-    * per-round checkpoint the multi-reference loops use.
+  /** Lineage-truncation cadence for the loops that read the previous
+    * round's frame once ([[pageRank]], [[trustRank]], [[spamMass]],
+    * [[hits]]): the frame is checkpointed every this-many rounds so
+    * arbitrarily deep iteration counts keep a bounded logical tree, while
+    * shallow (gate-sized) runs never pay a checkpoint. See [[pageRank]]'s
+    * docstring for the measured A/B that picked lazy-with-periodic-
+    * truncation over the per-round checkpoint the loops that read their
+    * previous round twice (BFS, SSSP, k-core) use.
     */
   val TruncateRounds: Int = 8
 
@@ -115,12 +116,12 @@ object Graph {
     * nothing is collected).
     *
     * Truncation discipline (round-11 A/B, Scratch6 construct+count at
-    * sf0.1/32): LAZY composition wins here, unlike hits/BFS/SSSP/kCore.
+    * sf0.1/32): LAZY composition wins here, unlike BFS/SSSP/kCore.
     * Those loops reference the previous round's frame MORE THAN ONCE per
-    * round (BFS: anti-join + union; HITS: edge join + broadcast total), so
-    * an untruncated tree re-executes shared subtrees combinatorially and
-    * per-round [[Caching.checkpoint]] was 1.5-4× faster. The damped
-    * propagations reference `ranks` exactly ONCE per round — the lazy tree
+    * round (BFS: anti-join + union), so an untruncated tree re-executes
+    * shared subtrees combinatorially and per-round [[Caching.checkpoint]]
+    * was 1.5-4× faster. The damped propagations (and [[hits]]) reference
+    * the previous round's frame exactly ONCE per round — the lazy tree
     * grows linearly and every subtree executes exactly once — so the
     * per-round checkpoint's cost (a planner pass + eager AQE stage
     * materialization per round, ~1.7 s warm each) buys nothing: measured
@@ -984,83 +985,51 @@ object Graph {
     * engines floor-divide the same integers, so every half-step replays
     * value-for-value ([[hitsOracleSql]] chains two CTEs per round).
     *
-    * Shape per round: two bounded equi-joins of the node-sized score
-    * tables against the persisted edge table (one per direction — the
-    * minimum for exact alternating HITS, since hub_i depends on auth_i
-    * which depends on hub_{i-1}) + two aggregates. The normalization
-    * DENOMINATORS never touch the edge table: Σ_d araw(d) =
-    * Σ_{(s,d)∈E} hub(s) = Σ_s hub(s)·outdeg(s) — the same integer terms
-    * re-associated — so each 1-row total is a NODE-sized join against the
-    * once-computed degree tables instead of a second pass over the
-    * edge-join output. That removes the per-half-step persist+re-read of
-    * `raw` (r8's shape) and halves the jobs per round; values are
-    * bit-identical (integer addition is associative/commutative) and
-    * [[hitsOracleSql]] still replays via `sum(raw)`. No driver state; the
-    * loop composes lazy plans at a fixed iteration count.
+    * Shape per half-step: one equi-join of the previous scores against
+    * the checkpointed distinct edge table, one aggregate by node (`raw`),
+    * and the total `sum(raw) over ()` as an un-partitioned window on that
+    * aggregate; the first authority half-step needs no join, because
+    * uniform starting hubs make its raw scores the in-degrees times S.
+    * Single-read invariant: each half-step reads the previous
+    * scores exactly ONCE, so the rounds compose one lazy plan whose
+    * subtrees each execute once (the [[pageRank]] discipline), truncated
+    * every [[TruncateRounds]] rounds. Two edge joins per round is the
+    * floor for exact alternating HITS: hub_i depends on auth_i, which
+    * depends on hub_{i-1}. The output reads the last authorities twice
+    * (their own rows and the last hub half-step); exchange reuse runs
+    * that subtree once. Window bound: the window moves one frame to a
+    * single task, and that frame is node-sized — the distinct dst nodes
+    * (authorities) or the distinct src nodes (hubs) — never edge-sized.
+    * No driver state; the loop composes lazy plans at a fixed iteration
+    * count.
     */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val S = RankScale
-    // ONE checkpoint flattens the edge build: the materialized RDD serves
-    // every downstream consumer (a persist would be a redundant second
-    // planning pass — each cacheQuery/checkpoint call IS a full planning
-    // pass, the dominant cost Scratch6 exposed), and every round's plan
-    // thereafter is a few nodes over the flat LogicalRDD
+    // ONE checkpoint flattens the edge build, which every half-step reads
     val e = Caching.checkpoint(
       edges.select(col("src"), col("dst")).distinct())
-    // plain, not persisted: re-computing a scan+agg of the checkpointed
-    // RDD per consumer is ~ms, cheaper than the persist's planning pass
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("odeg"))
-    val indeg = e.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).as("ideg"))
-    // Structural hazards handled (the original normalize-every-half-step
-    // loop measured 54 s before lineage truncation):
-    //  1. each round references the previous scores twice (edge join +
-    //     degree-side total) — auths is CHECKPOINTED and hubs PERSISTED
-    //     per round, so both run one execution of the shared subtree and
-    //     every round's plan is a few nodes over a flat base (see the
-    //     measured A/B below).
-    //  2. the totals ride the degree identity above, so no edge-sized
-    //     intermediate is ever read twice.
-    def scoreOf(raw: DataFrame, tot: DataFrame): DataFrame =
-      raw.crossJoin(broadcast(tot)).select(col("node"),
-        expr(s"cast(raw as decimal(38,0)) * $S div tot").as("score_u"))
-    // Per-round CHECKPOINT of auths, measured best (round-10 A/B at
-    // sf0.1/32, Scratch warm reps — COUNT phase; construction adds ~3 s
-    // in bench context either way, Scratch6): this r9 shape executes in
-    // 0.88-1.17 s; a checkpoint every 2nd round with a persist between —
-    // fewer planner passes on paper — executed in 2.1-3.9 s, 3-4x SLOWER,
-    // because between truncations the composed tree re-executes the
-    // broadcast total subtrees against InMemoryRelation scans instead
-    // of a flat LogicalRDD. The flat-base-per-round shape is also why the "fuse
-    // the two half-step edge joins like spamMass" idea can't apply:
-    // spamMass's two propagations are INDEPENDENT per round (one tagged
-    // union feeds one join), while HITS alternates — hraw_r consumes
-    // auths_r, which consumes araw_r — so every edge join's input is the
-    // previous join's output; two joins per round is the floor for exact
-    // alternating HITS (see PLANS.md round-10 notes).
-    var hubs = outdeg.select(col("node"), lit(S).as("score_u"))
+    def normalized(raw: DataFrame): DataFrame =
+      raw.select(col("node"), expr(
+        s"cast(raw as decimal(38,0)) * $S div sum(raw) over ()").as("score_u"))
+    // scores keyed on `from` → raw sums keyed on `to` → normalized. The
+    // shuffle_hash hint on the node-sized score side pins the join:
+    // left to AQE, its runtime sort-merge → broadcast switch raced the
+    // edge-side shuffle and the job count differed from run to run
+    def halfStep(scores: DataFrame, from: String, to: String): DataFrame =
+      normalized(e.join(
+          scores.withColumnRenamed("node", from).hint("shuffle_hash"), from)
+        .groupBy(col(to).as("node")).agg(sum(col("score_u")).as("raw")))
     var auths: DataFrame = null
+    var hubs: DataFrame = null
     for (r <- 1 to iters) {
-      val totA = hubs.join(outdeg, "node")
-        .agg(sum(col("score_u") * col("odeg")).as("tot"))
-      val araw = e.join(hubs.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("score_u")).as("raw"))
-      auths = Caching.checkpoint(scoreOf(araw, totA))
-      val totH = auths.join(indeg, "node")
-        .agg(sum(col("score_u") * col("ideg")).as("tot"))
-      val hraw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("score_u")).as("raw"))
-      // hubs is PERSISTED (not checkpointed): next round references it
-      // twice (totA's node join + araw's edge join), and the persist
-      // dedups that edge join's execution while costing only a cacheQuery
-      // pass on a few-node tree over the checkpointed auths. Round-10
-      // A/B (Scratch COUNT phase, sf0.1/32, warm): plain hubs
-      // 0.79-1.72 s across runs, persisted 0.86-0.91 s — same mean, far
-      // lower variance; kept for the stabler record. Values identical
-      // (persist never changes results).
-      hubs = Caching.persist(scoreOf(hraw, totH))
+      // hub_0 is S on every source, so auth_1's raw is S·indeg(d) and its
+      // total S·|E|: S cancels exactly in the floor division, and
+      // normalizing the in-degrees gives auth_1 bit for bit, without a join
+      auths = if (r == 1) normalized(e.groupBy(col("dst").as("node"))
+          .agg(count(lit(1)).as("raw")))
+        else halfStep(hubs, "src", "dst")
+      hubs = truncate(halfStep(auths, "dst", "src"), r)
     }
     auths.select(lit("auth").as("side"), col("node"), col("score_u"))
       .unionAll(hubs.select(lit("hub").as("side"), col("node"),
@@ -1455,8 +1424,8 @@ object Graph {
     * round-10 A/B (Scratch6 construct+count, sf0.1/32, warm) measured
     * per-level checkpoint 1.8-2.0 s vs the r9 cadence of a checkpoint
     * every k-th level with persists between, 5.0-6.0 s — a growing tree makes each persist's own planner pass
-    * cost more than a checkpoint's flat-base pass, the same finding as
-    * [[hits]] (r9's "checkpoints are per-round planner passes" doctrine
+    * cost more than a checkpoint's flat-base pass (r9's "checkpoints are
+    * per-round planner passes" doctrine
     * compared against NO truncation, not against cadenced persists whose
     * passes plan 3×-per-level-bigger trees). A level past the frontier's
     * death costs one empty equi-join, so the fixed `maxHops` bound needs

@@ -2439,7 +2439,7 @@ object Similarity {
     * aggregate — map-side combine ships partials, the
     * [[correlationMatrix]] shape); every power round then runs on the
     * d²-row matrix table — join + aggregate costs independent of corpus
-    * size, lineage truncated per round (the kCore/HITS guard). At 100 TB
+    * size, lineage truncated per round (the kCore guard). At 100 TB
     * the scatter build is one scan + one tiny shuffle; iterations are
     * driver-side trivia.
     */
@@ -2525,8 +2525,8 @@ object Similarity {
     * referenced CTEs are MATERIALIZED: DuckDB INLINES plain CTEs, and each
     * round references its `w` three times (normalizer twice + the
     * renormalize itself), so without materialization the pair-generation
-    * subtree re-expands 3^iters times — the SQL twin of the HITS
-    * exponential-plan hazard.
+    * subtree re-expands 3^iters times — the SQL twin of the exponential
+    * plan of a loop that reads its previous round more than once.
     */
   def pcaPowerOracleSql(iters: Int = 6, table: String = "embeddings",
       vecCol: String = "embedding"): String = {

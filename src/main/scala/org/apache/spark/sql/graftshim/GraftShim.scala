@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftshim
 
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ExpressionColumnNode, ExpressionUtils}
 import org.apache.spark.sql.{Column, SparkSession}
@@ -73,15 +75,26 @@ object GraftShim {
     * Counts ALL tasks that end while `f` runs, so callers should quiesce
     * other jobs first (test usage).
     */
-  def recordsReadDuring[T](spark: SparkSession)(f: => T): (T, Long) = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) acc.addAndGet(m.inputMetrics.recordsRead)
-      }
-    }
+  def recordsReadDuring[T](spark: SparkSession)(f: => T): (T, Long) =
+    countDuring(spark, f)(acc => new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          acc.addAndGet(m.inputMetrics.recordsRead))
+    })
+
+  /** Run `f` and return (result, number of Spark jobs it submitted), with
+    * the same bus draining and quiescing caveat as [[recordsReadDuring]].
+    */
+  def jobsDuring[T](spark: SparkSession)(f: => T): (T, Long) =
+    countDuring(spark, f)(acc => new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        acc.incrementAndGet()
+    })
+
+  private def countDuring[T](spark: SparkSession, f: => T)(
+      listenerOf: AtomicLong => SparkListener): (T, Long) = {
+    val acc = new AtomicLong(0L)
+    val listener = listenerOf(acc)
     spark.sparkContext.listenerBus.waitUntilEmpty()
     spark.sparkContext.addSparkListener(listener)
     try {

@@ -37,4 +37,32 @@ class BenchSpec extends AnyFunSuite {
     assert(node.path("errors").get(0).asText() ==
       "familyWarm graph (attempt 1): x\ty")
   }
+
+  test("the regression gate takes baselines only from the same core count") {
+    val sf = "/data/sf0.1"
+    def rec(q: Double, cpus: Option[Int]): String = {
+      val qs = ("q_x" -> q) +: (1 to 99).map(i => s"q_pad$i" -> 1.0)
+      val body = qs.map { case (k, v) =>
+        s""""$k":{"raw":$v,"norm":$v}""" }.mkString("{", ",", "}")
+      s"""{"sf":"$sf","n_queries":100,"cal_ratio":1.1,"queries":$body""" +
+        cpus.map(c => s""","cpus":$c""").getOrElse("") + "}"
+    }
+    // q_x ran 1.0 s on 32 cores (one record predates the key) and 3.0 s
+    // on 4; a 4-core session at 3.1 s is no regression
+    val history = Seq(rec(1.0, None), rec(1.0, Some(32)), rec(3.0, Some(4)),
+      rec(3.0, Some(4)))
+    val current = Map("q_x" -> 3.1)
+    assert(Bench.regressionsFor(current, history.iterator, sf, 4).isEmpty)
+    // at 32 cores the same 3.1 s is flagged against the 1.0 s baseline
+    assert(Bench.regressionsFor(current, history.iterator, sf, 32) ==
+      Seq(("q_x", 1.0, 3.1)))
+    // the gate itself is unchanged: 1.5x and 0.2 s above the baseline
+    assert(Bench.regressionsFor(Map("q_x" -> 4.4), history.iterator, sf, 4)
+      .isEmpty)
+    assert(Bench.regressionsFor(Map("q_x" -> 4.6), history.iterator, sf, 4)
+      .map(_._1) == Seq("q_x"))
+    // another sf never serves as a baseline
+    assert(Bench.regressionsFor(current, history.iterator, "/data/sf1", 32)
+      .isEmpty)
+  }
 }

@@ -225,6 +225,50 @@ class GraphSpec extends SparkSpec {
     assert(r(("auth", 100L)) == r(("auth", 200L)))
   }
 
+  private def hitsScores(e: org.apache.spark.sql.DataFrame, iters: Int) =
+    Graph.hits(e, iters).collect()
+      .map(x => (x.getString(0), x.getLong(1)) -> x.getLong(2)).toMap
+
+  test("hits: an empty edge table gives no rows") {
+    assert(hitsScores(Seq.empty[(Long, Long)].toDF("src", "dst"), 3).isEmpty)
+  }
+
+  test("hits: one edge puts all the mass on its two ends") {
+    val r = hitsScores(Seq((1L, 2L)).toDF("src", "dst"), 3)
+    assert(r == Map(("auth", 2L) -> Graph.RankScale,
+      ("hub", 1L) -> Graph.RankScale))
+  }
+
+  test("hits: a self-loop is an ordinary edge") {
+    // hub 1 endorses itself and 2 equally; it is the only hub
+    val r = hitsScores(Seq((1L, 1L), (1L, 2L)).toDF("src", "dst"), 2)
+    assert(r == Map(("auth", 1L) -> Graph.RankScale / 2,
+      ("auth", 2L) -> Graph.RankScale / 2, ("hub", 1L) -> Graph.RankScale))
+    // the floors of the full definition, from uniform hubs S: round 1
+    // raw auth = S·indeg = (S, 2S) over a total of 3S
+    val e = Seq((1L, 1L), (1L, 2L), (2L, 2L)).toDF("src", "dst")
+    assert(hitsScores(e, 1) == Map(("auth", 1L) -> 333333333333L,
+      ("auth", 2L) -> 666666666666L, ("hub", 1L) -> 600000000000L,
+      ("hub", 2L) -> 400000000000L))
+    assert(hitsScores(e, 2) == Map(("auth", 1L) -> 375000000000L,
+      ("auth", 2L) -> 625000000000L, ("hub", 1L) -> 615384615384L,
+      ("hub", 2L) -> 384615384615L))
+  }
+
+  test("hits: deep iteration counts run through lineage truncation") {
+    // two truncation rounds plus one lazy round past the last
+    val iters = 2 * Graph.TruncateRounds + 1
+    val e = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L), (3L, 10L))
+      .toDF("src", "dst")
+    val sums = Graph.hits(e, iters).groupBy("side")
+      .agg(sum("score_u").as("s")).collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(sums.keySet == Set("auth", "hub"))
+    sums.values.foreach { s =>
+      assert(s <= Graph.RankScale && s > Graph.RankScale - iters)
+    }
+  }
+
   test("triangles: known counts, clustering coefficient, hub cap") {
     import graft.operators.Graph
     val half = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))

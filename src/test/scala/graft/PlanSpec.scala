@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Plan-shape regression tests: the properties that make these queries
   * survive a 100x scale-up are asserted here, so a refactor that silently
@@ -475,11 +478,12 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(bnlj.isEmpty, "BFS levels must plan as keyed equi/anti joins")
   }
 
-  test("hits: final round plans over flat checkpointed bases, equi-joins only") {
-    // the round-10 measured shape: auths is checkpointed per round, so the
-    // executed plan of the LAST round must be a few joins over flat RDD
-    // scan leaves (LogicalRDD), never one deep tree composing all rounds —
-    // and every join keyed (a BNLJ would be a node×node cross product)
+  test("hits: rounds share one plan, equi-joins, window totals on node aggregates") {
+    // each half-step reads the previous scores once, so all rounds sit in
+    // one lazy plan over the flat checkpointed edge table (RDD scan
+    // leaves); every join is keyed (a BNLJ would be a node×node cross
+    // product) and every un-partitioned window total runs on the
+    // node-keyed raw aggregate, never on the edge-sized join output
     val (_, plan) = executed("q_graph_hits")
     val bnlj = collectWithSubqueries(plan) { case j: BroadcastNestedLoopJoinExec => j }
     assert(bnlj.isEmpty, "HITS rounds must plan as keyed equi-joins")
@@ -487,8 +491,47 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }
     assert(rddScans.nonEmpty,
-      "expected flat checkpointed RDD leaves — a zero count means the " +
-        "per-round truncation was dropped and rounds compose one deep tree")
+      "expected the checkpointed edge table as flat RDD scan leaves")
+    // the first node under the window that is not a sort, exchange or
+    // projection
+    def below(p: SparkPlan): SparkPlan = p match {
+      case s: QueryStageExec => below(s.plan)
+      case r: ReusedExchangeExec => below(r.child)
+      case a: BaseAggregateExec => a
+      case u if u.children.size == 1 => below(u.children.head)
+      case other => other
+    }
+    val totals = collectWithSubqueries(plan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => below(w.child)
+    }
+    assert(totals.size >= 6, "one window total per half-step of 3 rounds, " +
+      s"got ${totals.size}")
+    totals.foreach {
+      case a: BaseAggregateExec =>
+        assert(a.groupingExpressions.size == 1 &&
+          a.output.map(_.name).contains("node"),
+          s"window total over an aggregate keyed on ${a.groupingExpressions}")
+      case other =>
+        fail(s"window total must run on a node aggregate, not ${other.nodeName}")
+    }
+  }
+
+  test("hits: building fires at most 2 jobs, and executions repeat their job count") {
+    spark.catalog.clearCache()
+    def buildAndRun(): (Long, Long) = {
+      val (df, built) = GraftShim.jobsDuring(spark) {
+        SparkEntry.queries("q_graph_hits")(spark, sfDir)
+      }
+      val (_, ran) = GraftShim.jobsDuring(spark) {
+        df.write.format("noop").mode("overwrite").save()
+      }
+      (built, ran)
+    }
+    val (built1, ran1) = buildAndRun()
+    val (built2, ran2) = buildAndRun()
+    assert(built1 <= 2 && built2 <= 2,
+      s"construct-time jobs $built1, $built2: the rounds must compose lazily")
+    assert(ran1 == ran2, s"execution jobs differ: $ran1 vs $ran2")
   }
 
   test("mmdByGroup: pair math runs on the group-dim aggregate, not the corpus") {
