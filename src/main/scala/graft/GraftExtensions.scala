@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.ArrayReduceAgg
+import graft.functions.{ArrayReduceAgg, Monoid}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -32,7 +32,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit =
-    ArrayReduceAgg.ops.foreach { op =>
+    Monoid.ops.foreach { op =>
       val name = s"array_reduce_${op}_native"
       ext.injectFunction((
         FunctionIdentifier(name),

@@ -26,40 +26,20 @@ object ArrayReduce {
   def of[T](m: Monoid[T])(implicit tt: TypeTag[T], ct: ClassTag[T]): UserDefinedFunction =
     functions.udaf(new ArrayMonoidReduce[T](m))
 
-  // Int32 defaults (reference src/monoid.rs:472-489)
-  def sum: UserDefinedFunction = of(Monoid.sumInt)
-  def product: UserDefinedFunction = of(Monoid.productInt)
-  def max: UserDefinedFunction = of(Monoid.maxInt)
-  def min: UserDefinedFunction = of(Monoid.minInt)
-
   /** All (op × element-type) instantiations keyed by SQL function name. */
   def all: Seq[(String, UserDefinedFunction)] = {
-    def family[T: TypeTag: ClassTag](suffix: String, s: Monoid[T], p: Monoid[T],
-        mx: Monoid[T], mn: Monoid[T]): Seq[(String, UserDefinedFunction)] = Seq(
-      s"array_reduce_sum_$suffix" -> of(s),
-      s"array_reduce_product_$suffix" -> of(p),
-      s"array_reduce_max_$suffix" -> of(mx),
-      s"array_reduce_min_$suffix" -> of(mn),
-    )
+    def family[T: TypeTag: ClassTag](suffix: String, m: String => Monoid[T])
+        : Seq[(String, UserDefinedFunction)] =
+      Monoid.ops.map(op => s"array_reduce_${op}_$suffix" -> of(m(op)))
     import Monoid._
-    Seq(
-      // un-suffixed names are the Int32 defaults, as in the reference
-      "array_reduce_sum" -> sum,
-      "array_reduce_product" -> product,
-      "array_reduce_max" -> max,
-      "array_reduce_min" -> min,
-    ) ++
-      family[Byte]("byte", sumByte, productByte, maxByte, minByte) ++
-      family[Short]("short", sumShort, productShort, maxShort, minShort) ++
-      family[Int]("int", sumInt, productInt, maxInt, minInt) ++
-      family[Long]("long", sumLong, productLong, maxLong, minLong) ++
-      family[Float]("float", sumFloat, productFloat, maxFloat, minFloat) ++
-      family[Double]("double", sumDouble, productDouble, maxDouble, minDouble) ++
+    // un-suffixed names are the Int32 defaults, as in the reference
+    // (src/monoid.rs:472-489)
+    Monoid.ops.map(op => s"array_reduce_$op" -> of(int(op))) ++
+      family("byte", byte) ++ family("short", short) ++ family("int", int) ++
+      family("long", long) ++ family("float", float) ++ family("double", double) ++
       // unsigned emulation over signed/decimal carriers — all of u8-u64
-      family[Int]("u8", sumU8, productU8, maxU8, minU8) ++
-      family[Int]("u16", sumU16, productU16, maxU16, minU16) ++
-      family[Long]("u32", sumU32, productU32, maxU32, minU32) ++
-      family[BigDecimal]("u64", sumU64, productU64, maxU64, minU64)
+      family("u8", u8) ++ family("u16", u16) ++ family("u32", u32) ++
+      family("u64", u64)
   }
 
   /** Idempotent session-wide registration of the whole family. */

@@ -28,8 +28,9 @@ final class ArrayReduceBuffer(var values: Array[Double], var longs: Array[Long])
   * Semantics match [[ArrayMonoidReduce]] (null rows skipped, null elements =
   * identity, first-array-length truncation, empty aggregate → empty array);
   * `ArrayReduceSpec` pins the two implementations against each other.
-  * Integral arithmetic clamps to the element width through the width-correct
-  * [[Monoid]] instance (Rust saturating semantics). Float32 folds
+  * Both tiers fold through the one op × type table in [[Monoid]]: integral
+  * elements on [[Monoid.longFold]] over the element width's range (Rust
+  * saturating semantics), floating ones on [[Monoid.doubleFold]]. Float32 folds
   * accumulate in double here (documented deviation of the native variant;
   * the `array_reduce_*_float` Aggregator family keeps bit-exact f32 folds).
   *
@@ -56,40 +57,19 @@ case class ArrayReduceAgg(
     case t => throw new IllegalArgumentException(s"unsupported element type $t")
   }
 
-  // Width-correct saturating fold over the Long carrier for integrals,
-  // written directly on Long so the inner loop never boxes (Function2 is
-  // @specialized for Long, unlike the generic Monoid trait): inputs are in
-  // the element width's range, so sum fits in Long and product of two
-  // sub-Long widths fits in Long — one clamp to the width reproduces the
-  // Rust saturating semantics (pinned against the Aggregator family in
-  // ArrayReduceAggSpec).
-  @transient private lazy val (longIdentity, longCombine): (Long, (Long, Long) => Long) = {
-    val (lo, hi) = elemType match {
-      case ByteType => (Byte.MinValue.toLong, Byte.MaxValue.toLong)
-      case ShortType => (Short.MinValue.toLong, Short.MaxValue.toLong)
-      case IntegerType => (Int.MinValue.toLong, Int.MaxValue.toLong)
-      case _ => (Long.MinValue, Long.MaxValue)
+  // The element type's [lo, hi] range on Monoid's Long fold, read straight
+  // as a (Long, Long) => Long so the inner loop never boxes (Function2 is
+  // @specialized for Long, unlike the generic Monoid trait).
+  @transient private lazy val (longIdentity, longCombine): (Long, (Long, Long) => Long) =
+    elemType match {
+      case ByteType => Monoid.longFold(opName, Byte.MinValue, Byte.MaxValue)
+      case ShortType => Monoid.longFold(opName, Short.MinValue, Short.MaxValue)
+      case IntegerType => Monoid.longFold(opName, Int.MinValue, Int.MaxValue)
+      case _ => Monoid.longFold(opName, Long.MinValue, Long.MaxValue)
     }
-    @inline def clamp(v: Long): Long = if (v > hi) hi else if (v < lo) lo else v
-    (opName, elemType) match {
-      case ("sum", LongType) => (0L, Monoid.satAddLong _)
-      case ("product", LongType) => (1L, Monoid.satMulLong _)
-      case ("sum", _) => (0L, (a: Long, b: Long) => clamp(a + b))
-      case ("product", _) => (1L, (a: Long, b: Long) => clamp(a * b))
-      case ("max", _) => (lo, (a: Long, b: Long) => math.max(a, b))
-      case ("min", _) => (hi, (a: Long, b: Long) => math.min(a, b))
-      case (op, t) => throw new IllegalArgumentException(s"no monoid $op/$t")
-    }
-  }
 
   @transient private lazy val (doubleIdentity, doubleCombine): (Double, (Double, Double) => Double) =
-    opName match {
-      case "sum" => (0.0, (a: Double, b: Double) => a + b)
-      case "product" => (1.0, (a: Double, b: Double) => a * b)
-      case "max" => (Double.NegativeInfinity, (a: Double, b: Double) => math.max(a, b))
-      case "min" => (Double.PositiveInfinity, (a: Double, b: Double) => math.min(a, b))
-      case op => throw new IllegalArgumentException(s"no monoid $op")
-    }
+    Monoid.doubleFold(opName)
 
   override def createAggregationBuffer(): ArrayReduceBuffer =
     new ArrayReduceBuffer(null, null)
@@ -242,11 +222,6 @@ case class ArrayReduceAgg(
 
 object ArrayReduceAgg {
 
-  /** The four reference ops (monoid.rs:85-221), shared by [[register]] and
-    * [[graft.GraftExtensions]].
-    */
-  val ops: Seq[String] = Seq("sum", "product", "max", "min")
-
   /** Column API: `ArrayReduceAgg.arrayReduce("sum", $"arrays")`. */
   def arrayReduce(op: String, c: Column): Column =
     GraftShim.column(
@@ -256,7 +231,7 @@ object ArrayReduceAgg {
     * inferred from the argument at analysis time.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    ops.foreach { op =>
+    Monoid.ops.foreach { op =>
       GraftShim.registerFunction(spark, s"array_reduce_${op}_native",
         exprs => ArrayReduceAgg(exprs.head, op).toAggregateExpression())
     }

@@ -8,9 +8,9 @@ package graft.functions
   * property-tested in `MonoidLawsSpec`.
   *
   * The reference supports 10 Arrow primitive types (`src/monoid.rs:34-37`),
-  * including unsigned ints. The JVM/Spark type system has no unsigned
-  * primitives, so the supported surface here is the 6 signed/float types:
-  * Byte, Short, Int, Long, Float, Double (documented deviation, SURVEY.md §7).
+  * including unsigned ints. The JVM has no unsigned primitives, so the
+  * unsigned types ride on wider signed carriers (or BigDecimal for u64),
+  * clamped to their unsigned range (README §2a).
   */
 trait Monoid[T] extends Serializable {
   def identity: T
@@ -19,48 +19,67 @@ trait Monoid[T] extends Serializable {
   def name: String
 }
 
-/** Instances mirroring the reference's op × type matrix
-  * (reference `src/monoid.rs:85-221`):
+/** The reference's op × type matrix (reference `src/monoid.rs:85-221`), the
+  * one table both `array_reduce_*` tiers read:
   *   - sum: identity 0, integers saturate (`saturating_add`), floats plain `+`
   *   - product: identity 1, integers saturate (`saturating_mul`), floats `*`
   *   - max: identity = type minimum (floats: -Infinity)
   *   - min: identity = type maximum (floats: +Infinity)
   *
-  * The JVM has no saturating arithmetic, so integer ops widen to Long (or use
-  * `Math.*Exact` for Long itself) and clamp to the type bounds — semantics
-  * match Rust's `saturating_add`/`saturating_mul` exactly at the bounds.
+  * Each integral type is a `[lo, hi]` range on one Long fold, the float
+  * types share one Double fold; [[ArrayReduceAgg]] folds on these carriers
+  * directly, and the per-type factories wrap them for [[ArrayMonoidReduce]].
   */
 object Monoid {
 
-  @inline private def clampByte(v: Long): Byte =
-    if (v > Byte.MaxValue) Byte.MaxValue
-    else if (v < Byte.MinValue) Byte.MinValue
-    else v.toByte
+  /** The four reference ops, in registration order. */
+  val ops: Seq[String] = Seq("sum", "product", "max", "min")
 
-  @inline private def clampShort(v: Long): Short =
-    if (v > Short.MaxValue) Short.MaxValue
-    else if (v < Short.MinValue) Short.MinValue
-    else v.toShort
-
-  @inline private def clampInt(v: Long): Int =
-    if (v > Int.MaxValue) Int.MaxValue
-    else if (v < Int.MinValue) Int.MinValue
-    else v.toInt
-
-  @inline private[functions] def satAddLong(a: Long, b: Long): Long =
+  @inline private def satAddLong(a: Long, b: Long): Long =
     try Math.addExact(a, b)
     catch {
       case _: ArithmeticException =>
         if (a > 0) Long.MaxValue else Long.MinValue
     }
 
-  @inline private[functions] def satMulLong(a: Long, b: Long): Long =
+  @inline private def satMulLong(a: Long, b: Long): Long =
     try Math.multiplyExact(a, b)
     catch {
       case _: ArithmeticException =>
         // overflow: result sign = sign(a) xor sign(b) (neither is 0 here)
         if ((a > 0) == (b > 0)) Long.MaxValue else Long.MinValue
     }
+
+  /** `op` on a Long carrier saturating at `[lo, hi]`, exactly Rust's
+    * saturating ops at the bounds. Where two in-range values cannot overflow
+    * Long, the plain operator and one clamp; elsewhere the checked operator.
+    * The combine stays a `(Long, Long) => Long`, which Function2
+    * specializes, so a caller's inner loop never boxes.
+    */
+  def longFold(op: String, lo: Long, hi: Long): (Long, (Long, Long) => Long) = {
+    val full = lo == Long.MinValue && hi == Long.MaxValue
+    require(full || (lo >= Long.MinValue / 2 && hi <= Long.MaxValue / 2), s"[$lo, $hi]")
+    @inline def clamp(v: Long): Long = if (v > hi) hi else if (v < lo) lo else v
+    op match {
+      case "sum" if full => (0L, satAddLong)
+      case "sum" => (0L, (a, b) => clamp(a + b))
+      case "product" if full => (1L, satMulLong)
+      case "product" if lo >= Int.MinValue && hi <= Int.MaxValue => (1L, (a, b) => clamp(a * b))
+      case "product" => (1L, (a, b) => clamp(satMulLong(a, b)))
+      case "max" => (lo, math.max)
+      case "min" => (hi, math.min)
+      case _ => throw new IllegalArgumentException(s"no monoid $op")
+    }
+  }
+
+  /** `op` on the Double carrier: IEEE `+`/`*`, ±Infinity max/min identities. */
+  def doubleFold(op: String): (Double, (Double, Double) => Double) = op match {
+    case "sum" => (0.0, _ + _)
+    case "product" => (1.0, _ * _)
+    case "max" => (Double.NegativeInfinity, math.max)
+    case "min" => (Double.PositiveInfinity, math.min)
+    case _ => throw new IllegalArgumentException(s"no monoid $op")
+  }
 
   private def inst[T](id: T, nm: String)(f: (T, T) => T): Monoid[T] =
     new Monoid[T] {
@@ -69,73 +88,44 @@ object Monoid {
       val name: String = nm
     }
 
-  // --- sum (reference src/monoid.rs:85-103) ---
-  val sumByte: Monoid[Byte] = inst[Byte](0, "sum")((a, b) => clampByte(a.toLong + b.toLong))
-  val sumShort: Monoid[Short] = inst[Short](0, "sum")((a, b) => clampShort(a.toLong + b.toLong))
-  val sumInt: Monoid[Int] = inst[Int](0, "sum")((a, b) => clampInt(a.toLong + b.toLong))
-  val sumLong: Monoid[Long] = inst[Long](0L, "sum")(satAddLong)
-  val sumFloat: Monoid[Float] = inst[Float](0.0f, "sum")(_ + _)
-  val sumDouble: Monoid[Double] = inst[Double](0.0, "sum")(_ + _)
+  // Integral carriers. The unsigned types (reference src/monoid.rs
+  // supports u8-u64) ride on Int (u8, u16) and Long (u32), clamped to
+  // [0, 2^bits-1] — Rust's unsigned saturating_add/mul exactly.
+  def byte(op: String): Monoid[Byte] = longFold(op, Byte.MinValue, Byte.MaxValue) match {
+    case (id, f) => inst(id.toByte, op)((a, b) => f(a, b).toByte)
+  }
+  def short(op: String): Monoid[Short] = longFold(op, Short.MinValue, Short.MaxValue) match {
+    case (id, f) => inst(id.toShort, op)((a, b) => f(a, b).toShort)
+  }
+  private def onInt(op: String, lo: Long, hi: Long): Monoid[Int] = longFold(op, lo, hi) match {
+    case (id, f) => inst(id.toInt, op)((a, b) => f(a, b).toInt)
+  }
+  def int(op: String): Monoid[Int] = onInt(op, Int.MinValue, Int.MaxValue)
+  def u8(op: String): Monoid[Int] = onInt(op, 0L, 255L)
+  def u16(op: String): Monoid[Int] = onInt(op, 0L, 65535L)
+  private def onLong(op: String, lo: Long, hi: Long): Monoid[Long] =
+    longFold(op, lo, hi) match { case (id, f) => inst(id, op)(f) }
+  def long(op: String): Monoid[Long] = onLong(op, Long.MinValue, Long.MaxValue)
+  def u32(op: String): Monoid[Long] = onLong(op, 0L, 4294967295L)
 
-  // --- product (reference src/monoid.rs:105-155) ---
-  val productByte: Monoid[Byte] = inst[Byte](1, "product")((a, b) => clampByte(a.toLong * b.toLong))
-  val productShort: Monoid[Short] = inst[Short](1, "product")((a, b) => clampShort(a.toLong * b.toLong))
-  val productInt: Monoid[Int] = inst[Int](1, "product")((a, b) => clampInt(a.toLong * b.toLong))
-  val productLong: Monoid[Long] = inst[Long](1L, "product")(satMulLong)
-  val productFloat: Monoid[Float] = inst[Float](1.0f, "product")(_ * _)
-  val productDouble: Monoid[Double] = inst[Double](1.0, "product")(_ * _)
+  // Float folds in Double and rounds back after every combine: bit-identical
+  // to f32 `+`/`*` (53 ≥ 2·24+2 makes the double rounding innocuous), exact
+  // for max/min.
+  def double(op: String): Monoid[Double] = doubleFold(op) match { case (id, f) => inst(id, op)(f) }
+  def float(op: String): Monoid[Float] = doubleFold(op) match {
+    case (id, f) => inst(id.toFloat, op)((a, b) => f(a, b).toFloat)
+  }
 
-  // --- max (reference src/monoid.rs:157-188; float identity -Inf) ---
-  val maxByte: Monoid[Byte] = inst[Byte](Byte.MinValue, "max")((a, b) => if (a >= b) a else b)
-  val maxShort: Monoid[Short] = inst[Short](Short.MinValue, "max")((a, b) => if (a >= b) a else b)
-  val maxInt: Monoid[Int] = inst[Int](Int.MinValue, "max")(math.max)
-  val maxLong: Monoid[Long] = inst[Long](Long.MinValue, "max")(math.max)
-  val maxFloat: Monoid[Float] = inst[Float](Float.NegativeInfinity, "max")(math.max)
-  val maxDouble: Monoid[Double] = inst[Double](Double.NegativeInfinity, "max")(math.max)
-
-  // --- unsigned emulation (reference src/monoid.rs supports u8-u64; the
-  // JVM has no unsigned primitives, so u8/u16 ride on Int and u32 on Long
-  // with clamping to [0, maxU] — matching Rust's unsigned saturating_add/mul
-  // exactly. u64 rides on BigDecimal (→ Spark DecimalType) below — exact,
-  // off the primitive fast path, completing all 10 reference types. ---
-  @inline private def clampU(max: Long)(v: Long): Long =
-    if (v > max) max else if (v < 0L) 0L else v
-  private def uIntInst(max: Long, id: Long, nm: String)(f: (Long, Long) => Long): Monoid[Int] =
-    inst[Int](id.toInt, nm)((a, b) => clampU(max)(f(a.toLong, b.toLong)).toInt)
-
-  val sumU8: Monoid[Int] = uIntInst(255L, 0L, "sum")(_ + _)
-  val sumU16: Monoid[Int] = uIntInst(65535L, 0L, "sum")(_ + _)
-  val sumU32: Monoid[Long] = inst[Long](0L, "sum")((a, b) => clampU(4294967295L)(a + b))
-  val productU8: Monoid[Int] = uIntInst(255L, 1L, "product")(_ * _)
-  val productU16: Monoid[Int] = uIntInst(65535L, 1L, "product")(_ * _)
-  val productU32: Monoid[Long] = inst[Long](1L, "product")((a, b) => clampU(4294967295L)(satMulLong(a, b)))
-  val maxU8: Monoid[Int] = uIntInst(255L, 0L, "max")(math.max) // u8::MIN == 0
-  val maxU16: Monoid[Int] = uIntInst(65535L, 0L, "max")(math.max)
-  val maxU32: Monoid[Long] = inst[Long](0L, "max")(math.max)
-  val minU8: Monoid[Int] = uIntInst(255L, 255L, "min")(math.min) // identity u8::MAX
-  val minU16: Monoid[Int] = uIntInst(65535L, 65535L, "min")(math.min)
-  val minU32: Monoid[Long] = inst[Long](4294967295L, "min")(math.min)
-
-  // --- u64 on an exact BigDecimal carrier (Spark DecimalType(38,18):
-  // 20 integral digits ≥ the 20 digits of u64::MAX). Clamp to
-  // [0, 2^64-1] = Rust's unsigned saturating_add/mul. ---
+  // u64 on an exact BigDecimal carrier (Spark DecimalType(38,18): 20
+  // integral digits ≥ the 20 digits of u64::MAX), clamped to [0, 2^64-1].
   val maxU64Value: BigDecimal = BigDecimal("18446744073709551615")
   @inline private def clampU64(v: BigDecimal): BigDecimal =
     if (v > maxU64Value) maxU64Value else if (v < 0) BigDecimal(0) else v
-  val sumU64: Monoid[BigDecimal] =
-    inst[BigDecimal](BigDecimal(0), "sum")((a, b) => clampU64(a + b))
-  val productU64: Monoid[BigDecimal] =
-    inst[BigDecimal](BigDecimal(1), "product")((a, b) => clampU64(a * b))
-  val maxU64: Monoid[BigDecimal] =
-    inst[BigDecimal](BigDecimal(0), "max")((a, b) => if (a >= b) a else b)
-  val minU64: Monoid[BigDecimal] =
-    inst[BigDecimal](maxU64Value, "min")((a, b) => if (a <= b) a else b)
-
-  // --- min (reference src/monoid.rs:190-221; float identity +Inf) ---
-  val minByte: Monoid[Byte] = inst[Byte](Byte.MaxValue, "min")((a, b) => if (a <= b) a else b)
-  val minShort: Monoid[Short] = inst[Short](Short.MaxValue, "min")((a, b) => if (a <= b) a else b)
-  val minInt: Monoid[Int] = inst[Int](Int.MaxValue, "min")(math.min)
-  val minLong: Monoid[Long] = inst[Long](Long.MaxValue, "min")(math.min)
-  val minFloat: Monoid[Float] = inst[Float](Float.PositiveInfinity, "min")(math.min)
-  val minDouble: Monoid[Double] = inst[Double](Double.PositiveInfinity, "min")(math.min)
+  def u64(op: String): Monoid[BigDecimal] = op match {
+    case "sum" => inst(BigDecimal(0), op)((a, b) => clampU64(a + b))
+    case "product" => inst(BigDecimal(1), op)((a, b) => clampU64(a * b))
+    case "max" => inst(BigDecimal(0), op)((a, b) => if (a >= b) a else b)
+    case "min" => inst(maxU64Value, op)((a, b) => if (a <= b) a else b)
+    case _ => throw new IllegalArgumentException(s"no monoid $op")
+  }
 }

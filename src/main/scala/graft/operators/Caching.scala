@@ -83,9 +83,13 @@ object Caching {
     * by construction (checkpointing replays the same deterministic plan);
     * CachingSpec pins both modes equal at sf0.001.
     *
-    * `eager = false` (the operators' default) keeps the round lazy so the
-    * materialization lands in the first job that needs it, matching the
-    * pre-seam localCheckpoint(false) behavior exactly.
+    * `eager = false` (the operators' default) matches the pre-seam
+    * localCheckpoint(false) behavior exactly. It does not make the call
+    * free: under AQE, checkpointing the plan runs its shuffle stages when
+    * it is called, so building `q_graph_hits` fires its 2 construct jobs
+    * from its edge checkpoint (pinned in PlanSpec). Only the final stage,
+    * which writes the checkpoint blocks, waits for the first job that
+    * reads the result.
     */
   private[graft] def checkpoint(df: DataFrame,
       eager: Boolean = false): DataFrame = {

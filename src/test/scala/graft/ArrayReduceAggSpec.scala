@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.ArrayReduceAgg
+import graft.functions.{ArrayReduceAgg, Monoid}
 import graft.sources.Tables
 import org.apache.spark.sql.functions.col
 
@@ -112,6 +112,46 @@ class ArrayReduceAggSpec extends SparkSpec {
     }
   }
 
+  // Every slot folds a different order of the type's min, max, -1, 0, 1
+  // and 2, so each op saturates at both bounds somewhere. One partition
+  // fixes the fold order, which saturating sum/product depend on; both
+  // tiers must equal the same row-order fold of exact arithmetic clamped
+  // after every step.
+  test("native equals the Aggregator family at the byte and short bounds") {
+    def check[T](suffix: String, lo: Long, hi: Long, rows: Seq[Seq[T]])(
+        view: Seq[Seq[T]] => org.apache.spark.sql.DataFrame): Unit = {
+      view(rows).coalesce(1).createOrReplaceTempView(s"t_bounds_$suffix")
+      for (op <- Monoid.ops) {
+        val r = spark.sql(s"SELECT array_reduce_${op}_native(arrays), " +
+          s"array_reduce_${op}_$suffix(arrays) FROM t_bounds_$suffix").collect()(0)
+        val (native, agg) = (r.getSeq[T](0), r.getSeq[T](1))
+        val expected = rows.transpose.map(_.map(v => BigInt(v.toString))
+          .foldLeft(op match {
+            case "sum" => BigInt(0)
+            case "product" => BigInt(1)
+            case "max" => BigInt(lo)
+            case "min" => BigInt(hi)
+          }) { (acc, v) =>
+            val x = op match {
+              case "sum" => acc + v
+              case "product" => acc * v
+              case "max" => acc.max(v)
+              case "min" => acc.min(v)
+            }
+            x.max(BigInt(lo)).min(BigInt(hi))
+          })
+        assert(native == agg, s"$suffix op=$op")
+        assert(native.map(v => BigInt(v.toString)) == expected, s"$suffix op=$op")
+      }
+    }
+    def rows(vs: Seq[Long]): Seq[Seq[Long]] =
+      (0 until 8).map(i => (0 until 12).map(j => vs((i * (1 + j / 6) + j) % vs.length)))
+    check[Byte]("byte", Byte.MinValue, Byte.MaxValue,
+      rows(Seq(Byte.MinValue, Byte.MaxValue, -1, 0, 1, 2)).map(_.map(_.toByte)))(_.toDF("arrays"))
+    check[Short]("short", Short.MinValue, Short.MaxValue,
+      rows(Seq(Short.MinValue, Short.MaxValue, -1, 0, 1, 2)).map(_.map(_.toShort)))(_.toDF("arrays"))
+  }
+
   test("native GROUP BY + Column API") {
     val df = Seq(("a", Seq(1, 2)), ("a", Seq(10, 20)), ("b", Seq(5, 5))).toDF("k", "arrays")
     val got = df.groupBy(col("k"))
@@ -155,7 +195,7 @@ class ArrayReduceAggSpec extends SparkSpec {
     val live = GraftShim.functionRegistry(spark)
     val cloned = live.clone()
     GraftShim.applyExtensionFunctions(ext, cloned)
-    ArrayReduceAgg.ops.foreach { op =>
+    Monoid.ops.foreach { op =>
       assert(cloned.functionExists(
         FunctionIdentifier(s"array_reduce_${op}_native")),
         s"extension must register array_reduce_${op}_native")

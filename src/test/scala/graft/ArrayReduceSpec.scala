@@ -178,7 +178,7 @@ class ArrayReduceSpec extends SparkSpec {
         def length: Int = xs.length
         def iterator: Iterator[Option[Int]] = xs.iterator
       }
-    val agg = new ArrayMonoidReduce[Int](Monoid.sumInt)
+    val agg = new ArrayMonoidReduce[Int](Monoid.int("sum"))
     val w = 1024
     val rows: Seq[List[Option[Int]]] = Seq(
       List.tabulate(w)(j => if (j % 7 == 0) None else Some(j)),
