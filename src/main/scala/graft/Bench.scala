@@ -237,9 +237,9 @@ object Bench {
     // dev-only subset hook: regex over query names (unset under the driver,
     // so recorded runs always time the full registry)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    // "family" (the DEFAULT since round 9) clears accumulated operator
-    // persists at family boundaries: intra-family plan-identical sharing
-    // is preserved, cross-family storage pressure released. Re-measured
+    // Every family boundary (since round 9) clears accumulated operator
+    // persists: intra-family plan-identical sharing is preserved,
+    // cross-family storage pressure released. Re-measured
     // at the 278-query registry: family-clear 184.0 s normalized vs
     // never-clear 257.2 s SAME CODE, and never-clear showed pathological
     // per-query blowups from eviction/recompute storms late in the run
@@ -247,9 +247,7 @@ object Bench {
     // is 15-20% slower" measurement predates ~100 queries of growth in
     // the registry; at this size the CacheManager's per-planning lookup
     // over accumulated entries + storage eviction dominates whatever
-    // cross-family sharing saved. Override with SPARK_GRAFT_CLEAR=never
-    // to A/B the old behavior.
-    val clearMode = sys.env.get("SPARK_GRAFT_CLEAR").orElse(Some("family"))
+    // cross-family sharing saved.
     // Machine-load calibration: a fixed CPU-bound probe timed before/after
     // the sweep AND every `calEvery` queries inside it. The recorded
     // wall-clock totals have repeatedly been contaminated by concurrent
@@ -305,7 +303,7 @@ object Bench {
         .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
         .map { case (name, fn) =>
           val family = name.split("_")(1)
-          if (clearMode.contains("family") && family != lastFamily) {
+          if (family != lastFamily) {
             val w0 = System.nanoTime()
             // release operator persists from previous families; re-cache
             // the base table views EAGERLY (a lazy .cache() would bill

@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.{ArrayReduceAgg, Monoid}
+import graft.functions.ArrayReduceAgg
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark-native extension entry point — the deployment path that needs NO
   * driver-side code: any session started with
@@ -32,19 +32,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit =
-    Monoid.ops.foreach { op =>
-      val name = s"array_reduce_${op}_native"
+    ArrayReduceAgg.sqlBuilders.foreach { case (name, build) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[ArrayReduceAgg].getCanonicalName, name),
-        (exprs: Seq[Expression]) => {
-          // builders run at analysis time — a clear arity message here
-          // surfaces as an analysis error instead of exprs.head throwing
-          // an opaque NoSuchElementException on `SELECT name()`
-          if (exprs.length != 1) throw new IllegalArgumentException(
-            s"$name expects exactly 1 argument (an array column), " +
-              s"got ${exprs.length}")
-          ArrayReduceAgg(exprs.head, op).toAggregateExpression()
-        }))
+        build))
     }
 }

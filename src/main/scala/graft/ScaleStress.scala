@@ -10,16 +10,10 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[4]")
+    val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
-    // dev A/B hook for the CC-engine dispatch (Dedup.connectedComponents).
-    // Only set when the env var is present (ADVICE r13): the conf beats
-    // call-site engineDefault, so an unconditional default here would make
-    // default stress runs measure dbscanGrid under minlabel instead of its
-    // shipped tworule default.
-    sys.env.get("SPARK_GRAFT_CC").foreach(builder.config("spark.graft.cc", _))
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")

@@ -227,12 +227,20 @@ object ArrayReduceAgg {
     GraftShim.column(
       ArrayReduceAgg(GraftShim.expression(c), op).toAggregateExpression())
 
-  /** Register SQL names `array_reduce_{op}_native(array)` — element type is
-    * inferred from the argument at analysis time.
+  /** SQL name and builder of `array_reduce_{op}_native(array)` for every
+    * op — element type is inferred from the argument at analysis time.
+    * Shared by [[register]] and [[graft.GraftExtensions]].
     */
+  val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] =
+    Monoid.ops.map { op =>
+      val name = s"array_reduce_${op}_native"
+      name -> GraftShim.unary(name)(
+        ArrayReduceAgg(_, op).toAggregateExpression())
+    }
+
+  /** Register [[sqlBuilders]] in this session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Monoid.ops.foreach { op =>
-      GraftShim.registerFunction(spark, s"array_reduce_${op}_native",
-        exprs => ArrayReduceAgg(exprs.head, op).toAggregateExpression())
+    sqlBuilders.foreach { case (name, build) =>
+      GraftShim.registerFunction(spark, name, build)
     }
 }

@@ -97,9 +97,12 @@ object SimHash {
 
   /** Register `simhash64` + `rolling_hash64` + `fnv64` for SQL use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftShim.registerFunction(spark, "simhash64", exprs => SimHash(exprs.head))
-    GraftShim.registerFunction(spark, "rolling_hash64", exprs => RollingHash(exprs.head))
-    GraftShim.registerFunction(spark, "fnv64", exprs => Fnv64(exprs.head))
+    GraftShim.registerFunction(spark, "simhash64",
+      GraftShim.unary("simhash64")(SimHash(_)))
+    GraftShim.registerFunction(spark, "rolling_hash64",
+      GraftShim.unary("rolling_hash64")(RollingHash(_)))
+    GraftShim.registerFunction(spark, "fnv64",
+      GraftShim.unary("fnv64")(Fnv64(_)))
   }
 }
 

@@ -575,81 +575,53 @@ object Dedup {
     * minimum id) per family. Returns (doc_id, family_id) for every
     * endpoint of `pairs`.
     *
-    * Two interchangeable engines (identical output, spec-pinned equal;
-    * both O(log) rounds of keyed equi-joins with per-round lineage
-    * truncation):
-    *  - `minlabel` — min-label propagation with a pointer-jumping hop
-    *    ([[connectedComponentsMinLabel]]);
-    *  - `tworule` — the alternating large-star/small-star algorithm
-    *    (Kiveris et al. 2014, [[connectedComponentsTwoRule]]), which
-    *    carries the EDGE set (shrinking toward stars) instead of a
-    *    node-label table.
-    * Select with `spark.graft.cc = minlabel | tworule` (the conf beats
-    * `engineDefault`, which call sites set to their measured winner —
-    * PLANS.md round-13 A/B: shallow dedup families converge in 1
-    * min-label round, so `minlabel` stays the global default, while
-    * [[Similarity.dbscanGrid]]'s deep grid-adjacency graphs run 14
-    * min-label rounds vs 5 two-rule rounds and measured 2.2× faster
-    * under `tworule` at 10× data).
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None,
-      engineDefault: String = "minlabel"): DataFrame =
-    pairs.sparkSession.conf.getOption("spark.graft.cc")
-        .getOrElse(engineDefault) match {
-      case "tworule" =>
-        connectedComponentsTwoRule(pairs, maxIter, checkpointDir)
-      case "minlabel" =>
-        connectedComponentsMinLabel(pairs, maxIter, checkpointDir)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.cc must be minlabel or tworule, got $other")
-    }
-
-  /** Min-label propagation CC: each round every node takes the minimum
-    * label among itself, its neighbors, and its label's label (the
+    * Min-label propagation: each round every node takes the minimum label
+    * among itself, its neighbors, and its label's label (the
     * pointer-jumping hop — doubles propagation distance per round, so
     * O(log diameter) rounds); each round one shuffled join + aggregate —
     * the standard large-graph CC shape, no driver-side graph state.
+    *
+    * Two engines, identical output (DedupSpec pins them equal), each the
+    * one engine its consumer runs — PLANS.md round 13 "CC engine A/B":
+    *  - this one, for the dedup families ([[duplicationProfile]],
+    *    [[keepBest]], [[leakSafeSplit]], `q_dedup_components`): shallow
+    *    families converge in 1 min-label round, where two-rule needs 2;
+    *  - [[connectedComponentsTwoRule]], for [[Similarity.dbscanGrid]]:
+    *    deep grid-adjacency graphs run 14 min-label rounds vs 5 two-rule
+    *    rounds, 2.2× faster under two-rule at 10× data.
+    *
+    * Every round is truncated through [[Caching.checkpoint]]:
+    * `localCheckpoint` by default (blocks on executors only — a lost
+    * executor kills the job), a reliable storage-backed checkpoint that
+    * survives executor loss under `spark.graft.reliableCheckpoints=true`
+    * plus `spark.graft.checkpointDir`; the iteration shape is the same.
     */
-  def connectedComponentsMinLabel(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // localCheckpoint (eager) rather than persist: it truncates LINEAGE, not
-    // just recomputation. With persist, every round's logical plan still
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    // checkpoint rather than persist: it truncates LINEAGE, not just
+    // recomputation. With persist, every round's logical plan still
     // embeds the full upstream pair-pipeline tree per reference, and each
     // (re)plan walks the session's CacheManager — in a session with ~80
     // cached plans that lookup dominated (17 s in-suite vs 2 s solo). A
     // checkpointed round is a flat LogicalRDD: planning cost is constant in
     // both round count and cache-pool size.
-    // Cluster mode: localCheckpoint stores blocks on executors only, so a
-    // lost executor mid-iteration kills the job (acceptable single-node,
-    // not on a 1000-executor cluster). Passing `checkpointDir` switches
-    // every round to a RELIABLE checkpoint (HDFS/object-store backed,
-    // survives executor loss); the iteration shape is unchanged.
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // LAZY truncation (eager = false): every round's checksum action runs
-    // immediately after the truncate and materializes the checkpoint as a
-    // side effect — one job per round instead of an explicit materialize
-    // job PLUS the checksum job. Lineage truncation (the reason this
-    // exists) is identical; honors the session-wide
-    // spark.graft.reliableCheckpoints switch when no explicit dir passed.
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(false)
-      else Caching.checkpoint(df)
+    // immediately after the checkpoint and materializes it as a side
+    // effect — one job per round instead of an explicit materialize job
+    // PLUS the checksum job.
     // persist (not checkpoint) the input pairs: they are referenced twice
     // below (forward + reversed), which would execute the upstream pair
     // pipeline twice in the edges job; a persisted plan also stays
     // canonicalized, so plan-identical pair queries elsewhere in the
     // session share the cache entry
     val p = pairs.transform(Caching.persist)
-    val edges = truncate(p
+    val edges = Caching.checkpoint(p
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct())
     // seed = min(self, neighbors): the first propagation round folded into
     // label init — one aggregate over edges instead of a distinct + a full
     // join round (edges are symmetrized, so every node appears as src)
-    var labels = truncate(edges.groupBy(col("src"))
+    var labels = Caching.checkpoint(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .select(col("src").as("node"), col("label")))
     // convergence witness: labels only ever decrease, so the label sum is
@@ -668,7 +640,8 @@ object Dedup {
         .join(ls.select(col("node").as("label"), col("label").as("label2")),
           Seq("label"))
         .select(col("node"), col("label2").as("label"))
-      truncate(ls.unionByName(fromNeighbors).unionByName(viaPointer)
+      Caching.checkpoint(ls.unionByName(fromNeighbors)
+        .unionByName(viaPointer)
         .groupBy(col("node")).agg(min(col("label")).as("label")))
     }
     // coalesce: sum(label) is NULL on an empty label set (zero near-dup
@@ -692,8 +665,6 @@ object Dedup {
       prev = cur
       i += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] rounds=$i nodes=${labels.count()}")
     labels.select(col("node").as("doc_id"), col("label").as("family_id"))
   }
 
@@ -712,8 +683,8 @@ object Dedup {
     * which SHRINKS monotonically toward |V| rows (the min-label engine's
     * per-round work stays Θ(|E|+|V|) throughout) — the reason to A/B the
     * two on heavy CC consumers. Same contract/levers as
-    * [[connectedComponentsMinLabel]]: per-round lineage truncation,
-    * reliable checkpoints via `checkpointDir` for cluster mode, EXACT
+    * [[connectedComponents]]: per-round lineage truncation through
+    * [[Caching.checkpoint]] (reliable under its session confs), EXACT
     * fixpoint detection — a count compare every round plus an
     * `exceptAll`-emptiness check on count-equal rounds (ADVICE r13: the
     * former count+shifted-sum checksum was not an injective multiset
@@ -725,16 +696,11 @@ object Dedup {
     * rounds around the fixpoint, over the already-shrunken ≈|V|-row star
     * set) and both operands are checkpointed, so the check is flat-plan.
     */
-  def connectedComponentsTwoRule(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(false)
-      else Caching.checkpoint(df)
+  def connectedComponentsTwoRule(pairs: DataFrame,
+      maxIter: Int = 20): DataFrame = {
     val p = pairs.transform(Caching.persist)
     // canonical directed (u > v) edges, self-loops dropped
-    var edges = truncate(p.select(
+    var edges = Caching.checkpoint(p.select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v")).distinct())
@@ -789,7 +755,7 @@ object Dedup {
         .where(col("x") =!= col("m"))
         .select(col("x").as("u"), col("m").as("v"))
         .repartition(col("u")).distinct()
-      edges = truncate(small)
+      edges = Caching.checkpoint(small)
       val curCount = edges.count()
       converged = curCount == prevCount &&
         edges.exceptAll(prevEdges).isEmpty
@@ -797,8 +763,6 @@ object Dedup {
       prevCount = curCount
       i += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc-tworule] rounds=$i edges=${edges.count()}")
     // at the fixpoint edges are (node, root) stars; roots (and any
     // endpoint that became one) label themselves. The defensive min-agg
     // keeps one row per node even when maxIter truncates pre-fixpoint
@@ -826,8 +790,8 @@ object Dedup {
     * scale surface beyond the components it consumes.
     */
   def duplicationProfile(df: DataFrame, pairs: DataFrame, idCol: String,
-      maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val fam = connectedComponents(pairs, maxIter, checkpointDir)
+      maxIter: Int = 20): DataFrame = {
+    val fam = connectedComponents(pairs, maxIter)
       .transform(Caching.persist)
     val famSizes = fam.groupBy(col("family_id"))
       .agg(count(lit(1)).as("family_size"))
@@ -878,9 +842,9 @@ object Dedup {
     * — an inner join here would both drop rows and, worse, silently change
     * the keeper when the missing member would have won.
     */
-  def keepBest(pairs: DataFrame, quality: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val fam = connectedComponents(pairs, maxIter, checkpointDir)
+  def keepBest(pairs: DataFrame, quality: DataFrame,
+      maxIter: Int = 20): DataFrame = {
+    val fam = connectedComponents(pairs, maxIter)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("family_id"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -906,11 +870,11 @@ object Dedup {
     * duplicate clusters, not the corpus); no extra corpus shuffle beyond it.
     */
   def leakSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
-      trainPct: Int = 80, valPct: Int = 10, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainPct: Int = 80, valPct: Int = 10,
+      maxIter: Int = 20): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 100,
       "need 0 < trainPct, 0 <= valPct, trainPct + valPct < 100")
-    val fam = connectedComponents(pairs, maxIter, checkpointDir)
+    val fam = connectedComponents(pairs, maxIter)
       .select(col("doc_id").as("__fid_doc"), col("family_id"))
     val keyed = df.join(fam, col(idCol) === col("__fid_doc"), "left")
       .drop("__fid_doc")

@@ -29,10 +29,10 @@ object Graph {
   val RankScale: Long = 1000000000000L
 
   /** Lineage-truncation cadence for the loops that read the previous
-    * round's frame once ([[pageRank]], [[trustRank]], [[spamMass]],
-    * [[hits]]): the frame is checkpointed every this-many rounds so
-    * arbitrarily deep iteration counts keep a bounded logical tree, while
-    * shallow (gate-sized) runs never pay a checkpoint. See [[pageRank]]'s
+    * round's frame once ([[pageRank]], [[trustRank]], [[hits]]): the
+    * frame is checkpointed every this-many rounds so arbitrarily deep
+    * iteration counts keep a bounded logical tree, while shallow
+    * (gate-sized) runs never pay a checkpoint. See [[pageRank]]'s
     * docstring for the measured A/B that picked lazy-with-periodic-
     * truncation over the per-round checkpoint the loops that read their
     * previous round twice (BFS, SSSP, k-core) use.
@@ -115,23 +115,23 @@ object Graph {
     * shuffles, no driver-side state (the loop only composes lazy plans;
     * nothing is collected).
     *
-    * Truncation discipline (round-11 A/B, Scratch6 construct+count at
-    * sf0.1/32): LAZY composition wins here, unlike BFS/SSSP/kCore.
-    * Those loops reference the previous round's frame MORE THAN ONCE per
-    * round (BFS: anti-join + union), so an untruncated tree re-executes
-    * shared subtrees combinatorially and per-round [[Caching.checkpoint]]
-    * was 1.5-4× faster. The damped propagations (and [[hits]]) reference
-    * the previous round's frame exactly ONCE per round — the lazy tree
-    * grows linearly and every subtree executes exactly once — so the
-    * per-round checkpoint's cost (a planner pass + eager AQE stage
-    * materialization per round, ~1.7 s warm each) buys nothing: measured
-    * 5-iteration gate query, lazy 1.2 s construct + 3.7 s count vs
-    * per-round checkpoint 8.4 s construct + 0.4 s count warm (cold: 13.0
-    * vs 36.5 s). Deep iteration counts still get lineage truncation —
-    * every [[TruncateRounds]] rounds the frame is checkpointed so a
-    * k=100 cluster run never approaches Catalyst tree limits; at the
-    * gate's k=5 the branch never fires and the plan is byte-identical to
-    * pure lazy.
+    * Truncation discipline (round-11 A/B, construct+count at sf0.1/32 in
+    * the Bench session config, as `Scratch10` times it): LAZY composition
+    * wins here, unlike BFS/SSSP/kCore. Those loops reference the previous
+    * round's frame MORE THAN ONCE per round (BFS: anti-join + union), so
+    * an untruncated tree re-executes shared subtrees combinatorially and
+    * per-round [[Caching.checkpoint]] was 1.5-4× faster. The damped
+    * propagations (and [[hits]]) reference the previous round's frame
+    * exactly ONCE per round — the lazy tree grows linearly and every
+    * subtree executes exactly once — so the per-round checkpoint's cost
+    * (a planner pass + eager AQE stage materialization per round, ~1.7 s
+    * warm each) buys nothing: measured 5-iteration gate query, lazy 1.2 s
+    * construct + 3.7 s count vs per-round checkpoint 8.4 s construct +
+    * 0.4 s count warm (cold: 13.0 vs 36.5 s). Deep iteration counts still
+    * get lineage truncation — every [[TruncateRounds]] rounds the frame is
+    * checkpointed so a k=100 cluster run never approaches Catalyst tree
+    * limits; at the gate's k=5 the branch never fires and the plan is
+    * byte-identical to pure lazy.
     */
   def pageRank(edges: DataFrame, iters: Int, dampNum: Int = 85,
       persistResult: Boolean = true): DataFrame = {
@@ -171,7 +171,7 @@ object Graph {
       ranks = truncate(next, r)
     }
     // persist the RESULT (node-sized, never edge-sized): any same-session
-    // consumer of the identical propagation — [[spamMassComposed]], a
+    // consumer of the identical propagation — [[spamMass]], a
     // rank-threshold filter, the rank/trust subtraction — cache-hits the
     // whole k-round tree instead of re-running it (r15: the
     // q_graph_modularity_w/lpa sharing pattern applied to the damped
@@ -242,7 +242,7 @@ object Graph {
       ranks = truncate(next, r)
     }
     // result persist: see [[pageRank]] — the trust propagation is exactly
-    // what [[spamMassComposed]] and a later standalone trustRank share
+    // what [[spamMass]] and a later standalone trustRank share
     Caching.persist(ranks)
   }
 
@@ -290,92 +290,17 @@ object Graph {
     * [[RankScale]] carrier (both propagations distribute the same total
     * mass, so the units subtract directly); the ratio is rounded to 6 dp.
     *
-    * Execution shape: NOT a naive [[pageRank]]+[[trustRank]] composition.
-    * Both propagations divide by the same degree and walk the same edges,
-    * so their states ride ONE tagged rank table (kind 0 = rank, 1 = trust)
-    * through ONE src-keyed edge join + (dst, kind) aggregate per round —
-    * the edge table (the big side at web scale) is scanned and joined once
-    * per iteration instead of twice, and k propagations over the same
-    * graph would cost the same single pass. Per-kind arithmetic is
-    * byte-identical to the standalone operators (verified in GraphSpec),
-    * so [[spamMassOracleSql]]'s two separate CTE pyramids still replay the
-    * result value-for-value.
+    * Execution shape: the [[pageRank]] ⊕ [[trustRank]] composition, left-
+    * joined on node (PageRank rows define the output node set). Both
+    * operators persist their RESULTS, so in a session that also runs the
+    * standalone propagations (any curation audit does: rank says
+    * authoritative, trust says reachable, mass is their gap) the
+    * composition cache-hits whichever propagation already ran and leaves
+    * the other cached for a later standalone query — across the
+    * three-query audit the edge table is scanned 2·k rounds, not 3·k.
+    * [[spamMassOracleSql]]'s two CTE pyramids replay it value-for-value.
     */
   def spamMass(edges: DataFrame, seeds: DataFrame, iters: Int,
-      dampNum: Int = 85): DataFrame = {
-    require(iters >= 0 && dampNum >= 0 && dampNum <= 100)
-    val deg = degrees(edges)
-    // plan-identical to pageRank/trustRank's edge prep → one shared cache
-    // entry when operators are mixed in a session
-    val e = edges.join(deg.withColumnRenamed("node", "src"), "src")
-      .select(col("src"), col("dst"), col("degree"))
-      .repartition(col("src"))
-      .transform(Caching.persist)
-    val sd = seeds.select(col("node")).distinct().transform(Caching.persist)
-    // ONE driver job for both scalars (r15): the two counts each paid a
-    // full job of scheduling on top of cached inputs
-    val cnt = deg.agg(count(lit(1)))
-      .crossJoin(sd.agg(count(lit(1)))).head()
-    val n = cnt.getLong(0)
-    val nSeeds = cnt.getLong(1)
-    val initP = RankScale / math.max(n, 1L)
-    val baseP = (100L - dampNum) * initP / 100L
-    val initT = RankScale / math.max(nSeeds, 1L)
-    val baseT = (100L - dampNum) * initT / 100L
-    // seed marker rows (kind 1, zero contribution): [[trustRank]]'s
-    // join-free teleport injection, so each round is exactly one edge
-    // join + one (dst, kind) aggregate for BOTH propagations
-    val sdC = sd.select(col("node").as("dst"), lit(1).as("kind"),
-      lit(0L).as("c"), lit(1).as("tel"))
-    var ranks = deg.select(col("node"), lit(0).as("kind"),
-        lit(initP).as("rank_u"))
-      .unionAll(sd.select(col("node"), lit(1).as("kind"),
-        lit(initT).as("rank_u")))
-    for (r <- 1 to iters) {
-      val contribs = e.join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), col("kind"), expr("rank_u div degree").as("c"),
-          lit(0).as("tel"))
-        .unionAll(sdC)
-      // lazy between rounds, truncated every TruncateRounds — the tagged
-      // frame is referenced once per round ([[pageRank]] has the A/B)
-      val next = contribs.groupBy(col("dst").as("node"), col("kind"))
-        .agg(expr(s"($dampNum * sum(c)) div 100").as("p"),
-          max(col("tel")).as("__tel"))
-        .select(col("node"), col("kind"),
-          (col("p") + when(col("kind") === 0, lit(baseP))
-            .otherwise(col("__tel") * lit(baseT)))
-            .cast("long").as("rank_u"))
-      ranks = truncate(next, r)
-    }
-    // un-tag: one row per node had kind 0 (rank) and optionally kind 1
-    // (trust); PageRank-side rows define the output node set (left join
-    // semantics of the standalone composition)
-    ranks.groupBy("node")
-      .agg(max(when(col("kind") === 0, col("rank_u"))).as("rank_u"),
-        max(when(col("kind") === 1, col("rank_u"))).as("trust_u"))
-      .where(col("rank_u").isNotNull)
-      .select(col("node"), col("rank_u"),
-        coalesce(col("trust_u"), lit(0L)).as("trust_u"))
-      .withColumn("mass_u", col("rank_u") - col("trust_u"))
-      .withColumn("rel_mass",
-        round(col("mass_u").cast("double") / col("rank_u").cast("double"), 6))
-  }
-
-  /** [[spamMass]] as the explicit pageRank ⊕ trustRank composition — the
-    * variant for sessions that ALSO compute the standalone propagations
-    * (any real curation audit does: rank says authoritative, trust says
-    * reachable, mass is their gap). Because [[pageRank]] and [[trustRank]]
-    * persist their RESULTS, the composition cache-hits whichever
-    * propagation the session has already run and leaves the other cached
-    * for a later standalone query: across the three-query audit the edge
-    * table is scanned 2·k rounds total instead of 3·k (the fused
-    * [[spamMass]] remains the right call when ONLY mass is wanted — one
-    * edge scan per round — so both shapes stay available). Values are
-    * byte-identical to [[spamMass]] (GraphSpec pins fused == composed);
-    * the output column set and the rel_mass rounding are the same
-    * expressions.
-    */
-  def spamMassComposed(edges: DataFrame, seeds: DataFrame, iters: Int,
       dampNum: Int = 85): DataFrame = {
     val rank = pageRank(edges, iters, dampNum)
     val trust = trustRank(edges, seeds, iters, dampNum)
@@ -1176,9 +1101,9 @@ object Graph {
     * one degree aggregate — bounded shuffles; the surviving set is
     * CHECKPOINTED per round (it feeds BOTH endpoint joins, and the flat
     * base measured faster than the r9 cadence of a checkpoint every k-th
-    * round with persists between — round-10
-    * Scratch6 A/B: 2.1 vs 3.2 s warm; set spark.graft.reliableCheckpoints
-    * on a cluster).
+    * round with persists between — round-10 construct+count A/B, as
+    * `Scratch10` times it: 2.1 vs 3.2 s warm; set
+    * spark.graft.reliableCheckpoints on a cluster).
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0)
@@ -1421,15 +1346,15 @@ object Graph {
     * the standard Pregel expansion as DataFrame ops. The frontier is a
     * filter over the visited set (dist = level−1), so ONE frame carries
     * all loop state, and that frame is CHECKPOINTED every level: the
-    * round-10 A/B (Scratch6 construct+count, sf0.1/32, warm) measured
-    * per-level checkpoint 1.8-2.0 s vs the r9 cadence of a checkpoint
-    * every k-th level with persists between, 5.0-6.0 s — a growing tree makes each persist's own planner pass
-    * cost more than a checkpoint's flat-base pass (r9's "checkpoints are
-    * per-round planner passes" doctrine
-    * compared against NO truncation, not against cadenced persists whose
-    * passes plan 3×-per-level-bigger trees). A level past the frontier's
-    * death costs one empty equi-join, so the fixed `maxHops` bound needs
-    * no per-level emptiness probe.
+    * round-10 A/B (construct+count as `Scratch10` times it, sf0.1/32,
+    * warm) measured per-level checkpoint 1.8-2.0 s vs the r9 cadence of a
+    * checkpoint every k-th level with persists between, 5.0-6.0 s — a
+    * growing tree makes each persist's own planner pass cost more than a
+    * checkpoint's flat-base pass (r9's "checkpoints are per-round planner
+    * passes" doctrine compared against NO truncation, not against
+    * cadenced persists whose passes plan 3×-per-level-bigger trees). A
+    * level past the frontier's death costs one empty equi-join, so the
+    * fixed `maxHops` bound needs no per-level emptiness probe.
     */
   def bfsDistances(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
     require(maxHops >= 0)
@@ -1937,11 +1862,13 @@ object Graph {
     * distance table against the flat checkpointed edge table + one
     * min-aggregate; the distance table is referenced twice per round
     * (relax join + union) and CHECKPOINTED each round — measured best
-    * (round-10 Scratch6 A/B warm: 1.8 s vs 2.8 s for a checkpoint every
-    * k-th round with persists between; same finding as [[bfsDistances]]). Negative weights are not validated (that would cost
-    * a scan): min-plus stays well-defined under the hop bound, but the
-    * result then depends on `maxHops` — callers wanting classic shortest
-    * paths should pass non-negative weights.
+    * (round-10 construct+count A/B as `Scratch10` times it, warm: 1.8 s
+    * vs 2.8 s for a checkpoint every k-th round with persists between;
+    * same finding as [[bfsDistances]]). Negative weights are not
+    * validated (that would cost a scan): min-plus stays well-defined
+    * under the hop bound, but the result then depends on `maxHops` —
+    * callers wanting classic shortest paths should pass non-negative
+    * weights.
     */
   def ssspBounded(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
     require(maxHops >= 0)

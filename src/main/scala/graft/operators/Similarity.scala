@@ -2466,8 +2466,9 @@ object Similarity {
     // ONE checkpoint flattens the corpus-pass pair pipeline: every round's
     // planning otherwise re-optimizes the full explode+gram subtree, and
     // every per-round lazy checkpoint is a planner pass + eager AQE stage
-    // materialization (the Scratch6 finding — this loop's 13 checkpoints
-    // measured 46 s of construction at sf0.1). smat is dim² rows (tiny).
+    // materialization (construct+count as `Scratch10` times it: this
+    // loop's 13 checkpoints measured 46 s of construction at sf0.1).
+    // smat is dim² rows (tiny).
     val smat = Caching.checkpoint(upper.unionAll(
       upper.where(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("sv"))))
@@ -2868,14 +2869,13 @@ object Similarity {
       .join(cores.withColumnRenamed("id", "id_b"), "id_b")
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-    // engineDefault = tworule: grid-adjacency core graphs are DEEP
-    // (round-13 A/B: 14 min-label rounds vs 5 two-rule rounds here;
-    // 2.2× faster at 10× data) — unlike the shallow dedup families,
-    // where min-label's seed fold converges immediately. Identical
-    // output either way (engine-equality spec in DedupSpec); override
-    // with spark.graft.cc.
-    val fams = Dedup.connectedComponents(coreEdges,
-        engineDefault = "tworule")
+    // the two-rule engine: grid-adjacency core graphs are DEEP
+    // (round-13 A/B, PLANS.md "CC engine A/B": 14 min-label rounds vs 5
+    // two-rule rounds here; 2.2× faster at 10× data) — unlike the
+    // shallow dedup families, where min-label's seed fold converges
+    // immediately. Identical output either way (engine-equality spec in
+    // DedupSpec).
+    val fams = Dedup.connectedComponentsTwoRule(coreEdges)
       .select(col("doc_id").as("id"), col("family_id"))
     val coreOut = cores.join(fams, Seq("id"), "left")
       .select(col("id"), coalesce(col("family_id"), col("id")).as("cluster"),

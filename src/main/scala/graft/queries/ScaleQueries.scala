@@ -234,14 +234,12 @@ object ScaleQueries {
     // demotion signal (both pyramids share the persisted edge build) ---
     "q_graph_spam_mass" -> ((s, d) => {
       val li = t(s, d, "lineitem")
-      // composed, not fused (r15): this session ALSO runs q_graph_pagerank
-      // (before, same edges/iters — its persisted result is cache-hit here)
-      // and q_graph_trustrank (after, same seeds — it cache-hits the trust
-      // propagation built here), so the composition scans the edge table
-      // 10 rounds across the three queries where three fused/standalone
-      // runs would scan it 15; values are byte-identical (GraphSpec pins
-      // fused == composed, and the oracle replays both pyramids either way)
-      graft.operators.Graph.spamMassComposed(
+      // composed (r15): this session ALSO runs q_graph_pagerank (before,
+      // same edges/iters — its persisted result is cache-hit here) and
+      // q_graph_trustrank (after, same seeds — it cache-hits the trust
+      // propagation built here), so the edge table is scanned 10 rounds
+      // across the three queries, not 15
+      graft.operators.Graph.spamMass(
         graft.operators.Graph.coEdges(li, "l_orderkey", "l_partkey"),
         li.where(col("l_partkey") % 50 === 0)
           .select(col("l_partkey").as("node")),

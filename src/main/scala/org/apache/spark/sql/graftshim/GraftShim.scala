@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ExpressionColumnNode, ExpressionUtils}
+import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.{Column, SparkSession}
 
 /** Minimal bridge into Spark's `private[sql]` surface, so graft can expose
@@ -21,6 +22,17 @@ object GraftShim {
 
   /** Extract the Catalyst expression backing a Column. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** SQL builder for the one-argument function `name`: any other argument
+    * count fails analysis with Spark's WRONG_NUM_ARGS error naming the
+    * function, the error built-in functions raise.
+    */
+  def unary(name: String)(build: Expression => Expression)
+      : Seq[Expression] => Expression = {
+    case Seq(child) => build(child)
+    case exprs => throw QueryCompilationErrors.wrongNumArgsError(
+      name, Seq(1), exprs.length)
+  }
 
   /** Register an expression builder as a SQL function in this session. */
   def registerFunction(spark: SparkSession, name: String,

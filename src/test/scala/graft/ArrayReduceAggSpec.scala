@@ -209,6 +209,35 @@ class ArrayReduceAggSpec extends SparkSpec {
     assert(got == Seq(4, 6))
   }
 
+  test("SQL builders reject a wrong argument count, naming the function") {
+    // the 4 natives (registered per session and injected by
+    // GraftExtensions) and the 3 SimHash scalars; each 2-argument call is
+    // well-typed, so only the arity check can reject it
+    val twoArgs = Monoid.ops.map(op =>
+        s"array_reduce_${op}_native" -> "array(1), array(2)") ++
+      Seq("simhash64" -> "array('a'), array('b')",
+        "rolling_hash64" -> "array('a'), array('b')",
+        "fnv64" -> "'a', 'b'")
+    for ((name, two) <- twoArgs; args <- Seq("", two)) {
+      val ex = intercept[Exception](spark.sql(s"SELECT $name($args)").collect())
+      assert(ex.getMessage.contains("WRONG_NUM_ARGS") &&
+        ex.getMessage.contains(name), s"$name($args): ${ex.getMessage}")
+    }
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.graftshim.GraftShim
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    val registry = GraftShim.functionRegistry(spark).clone()
+    GraftShim.applyExtensionFunctions(ext, registry)
+    Monoid.ops.foreach { op =>
+      val name = s"array_reduce_${op}_native"
+      val ex = intercept[Exception](
+        registry.lookupFunction(FunctionIdentifier(name), Seq.empty))
+      assert(ex.getMessage.contains(name), ex.getMessage)
+    }
+  }
+
   test("native matches Aggregator on real embeddings (floats in double fold ≈)") {
     Tables.load(spark, sfDir)
     val native = spark.sql(

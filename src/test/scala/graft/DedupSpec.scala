@@ -249,7 +249,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponentsTwoRule: equals the min-label engine on " +
-      "chains, cycles, stars, dense blobs; conf dispatch routes") {
+      "chains, cycles, stars, dense blobs") {
     // adversarial shapes: a long chain (deep diameter), a cycle, a hub
     // star, two dense blobs bridged by one edge, shuffled id order —
     // both engines must produce the identical (doc_id, family_id) map
@@ -262,7 +262,7 @@ class DedupSpec extends SparkSpec {
         yield (a, b)) :+ ((305L, 400L))
     val pairs = scala.util.Random.shuffle(
       chain ++ cycle ++ star ++ blobs).toDF("id_a", "id_b")
-    val minLabel = Dedup.connectedComponentsMinLabel(pairs)
+    val minLabel = Dedup.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val twoRule = Dedup.connectedComponentsTwoRule(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -273,17 +273,6 @@ class DedupSpec extends SparkSpec {
     // empty input: no crash, empty frame (both engines)
     assert(Dedup.connectedComponentsTwoRule(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0L)
-    // conf dispatch: tworule routes, bogus value fails fast
-    spark.conf.set("spark.graft.cc", "tworule")
-    try {
-      val viaConf = Dedup.connectedComponents(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(viaConf == minLabel)
-      spark.conf.set("spark.graft.cc", "bogus")
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs)
-      }
-    } finally spark.conf.unset("spark.graft.cc")
   }
 
   test("fuzzyPairs: small edits matched, distant texts and far ids excluded") {
@@ -299,23 +288,40 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: reliable-checkpoint mode matches localCheckpoint") {
-    // the cluster-safe path: a checkpointDir switches every round to an
-    // HDFS/object-store-backed checkpoint (survives executor loss); the
-    // answer must be identical and checkpoint files must actually land
+    // the cluster-safe path: Caching.checkpoint's session confs switch
+    // every round to a storage-backed checkpoint (survives executor loss);
+    // the answer must be identical and checkpoint files must land under
+    // the context's checkpoint dir — an earlier suite may already have
+    // installed one, which reliable mode then reuses
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    def families() = Dedup.connectedComponents(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def checkpointFiles(): Set[String] =
+      spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+        val path = new org.apache.hadoop.fs.Path(d)
+        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val files = scala.collection.mutable.Set.empty[String]
+        if (fs.exists(path)) {
+          val it = fs.listFiles(path, true)
+          while (it.hasNext) files += it.next().getPath.toString
+        }
+        files
+      }.toSet
+    assert(families() == want)
+    val before = checkpointFiles()
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    spark.conf.set("spark.graft.reliableCheckpoints", "true")
+    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-        .toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-        10L -> 10L, 11L -> 10L))
-      // the reliable path really wrote checkpoint data (not localCheckpoint)
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "expected reliable checkpoint files on disk")
+      assert(families() == want)
+      assert((checkpointFiles() -- before).nonEmpty,
+        "expected reliable checkpoint files under the context's checkpoint dir")
     } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      spark.conf.unset("spark.graft.reliableCheckpoints")
+      spark.conf.unset("spark.graft.checkpointDir")
     }
   }
 

@@ -130,20 +130,46 @@ class GraphSpec extends SparkSpec {
     assert(got == rank)
   }
 
-  test("spamMass single-pass pyramid equals the standalone composition") {
-    // the tagged-union iteration must reproduce pageRank + trustRank
-    // byte-for-byte — asymmetric degrees + a seed outside the edge set +
-    // a seed in a leaf position exercise every branch of the tagged join
-    val e = edgesOf((1L, 2L), (1L, 3L), (3L, 4L), (7L, 8L))
-    val seeds = Seq(3L, 99L).toDF("node")
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))
-    val fused = Graph.spamMass(e, seeds, iters = 6).collect().map(key).toSet
-    // the shipped composition variant (q_graph_spam_mass's shape) must
-    // reproduce the fused pyramid byte-for-byte, ALL five columns
-    val composed = Graph.spamMassComposed(e, seeds, iters = 6)
-      .collect().map(key).toSet
-    assert(fused == composed)
+  test("spamMass: asymmetric seeds, value-exact vs an in-driver " +
+      "rank/trust replay") {
+    // asymmetric degrees, a seed outside the edge set (99: teleport mass,
+    // never propagated, no output row), a seed (3) on the branch to leaf
+    // 4, and an unseeded component (7-8: trust 0, relative mass 1)
+    val pairs = Seq((1L, 2L), (1L, 3L), (3L, 4L), (7L, 8L))
+    val seeds = Set(3L, 99L)
+    val iters = 6
+    val got = Graph.spamMass(edgesOf(pairs: _*), seeds.toSeq.toDF("node"),
+        iters).collect()
+      .map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
+    // exact integer replay of both pinned propagations, driver-side
+    val edges = pairs ++ pairs.map(_.swap)
+    val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
+    val S = Graph.RankScale
+    // one round's damped in-flow per destination: (85 · Σ rank/degree) / 100
+    def inflow(rank: Map[Long, Long]): Map[Long, Long] = edges
+      .flatMap { case (s, d) => rank.get(s).map(r => d -> r / deg(s)) }
+      .groupBy(_._1)
+      .map { case (d, cs) => d -> 85L * cs.map(_._2).sum / 100L }
+    val rankBase = (100L - 85L) * (S / deg.size) / 100L
+    val trustInit = S / seeds.size
+    val trustBase = (100L - 85L) * trustInit / 100L
+    var rank = deg.keySet.map(_ -> S / deg.size).toMap
+    var trust = seeds.map(_ -> trustInit).toMap
+    for (_ <- 1 to iters) {
+      rank = inflow(rank).map { case (d, p) => d -> (rankBase + p) }
+      val p = inflow(trust)
+      trust = (p.keySet ++ seeds).map(d => d ->
+        (p.getOrElse(d, 0L) + (if (seeds(d)) trustBase else 0L))).toMap
+    }
+    val want = rank.map { case (v, r) =>
+      val t = trust.getOrElse(v, 0L)
+      v -> ((r, t, r - t, BigDecimal((r - t).toDouble / r.toDouble)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+    }
+    assert(got == want)
+    assert(trust(99L) > 0L && !got.contains(99L))
+    assert(got(7L)._2 == 0L && got(7L)._4 == 1.0)
   }
 
   test("degrees counts undirected degree over coEdges output") {

@@ -380,11 +380,11 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "the stratum-pair matrix must come from an equi self-join on fp")
   }
 
-  test("spamMass: the fused pyramid stays equi-join-only") {
+  test("spamMass: the composed pageRank/trustRank query stays equi-join-only") {
     val (_, plan) = executed("q_graph_spam_mass")
     val bnlj = collectWithSubqueries(plan) { case j: BroadcastNestedLoopJoinExec => j }
     assert(bnlj.isEmpty,
-      "tagged-union propagation must not introduce a nested-loop join")
+      "the rank/trust propagations must not introduce a nested-loop join")
   }
 
   test("dedupSegments: winner via aggregate, no nested-loop, no corpus window") {
