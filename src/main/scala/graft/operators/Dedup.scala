@@ -593,8 +593,9 @@ object Dedup {
     * Every round is truncated through [[Caching.checkpoint]]:
     * `localCheckpoint` by default (blocks on executors only — a lost
     * executor kills the job), a reliable storage-backed checkpoint that
-    * survives executor loss under `spark.graft.reliableCheckpoints=true`
-    * plus `spark.graft.checkpointDir`; the iteration shape is the same.
+    * survives executor loss under `spark.graft.reliableCheckpoints=true`,
+    * written to the SparkContext's checkpoint dir (`spark.checkpoint.dir`
+    * or `SparkContext.setCheckpointDir`); the iteration shape is the same.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // checkpoint rather than persist: it truncates LINEAGE, not just

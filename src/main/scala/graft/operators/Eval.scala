@@ -64,7 +64,9 @@ object Eval {
     * can never reach it, so strict comparisons stay correct).
     * One shared implementation serves [[Profile.skyline]] and any future
     * dominance-style consumer — two inline copies of the bucket pattern
-    * would drift apart.
+    * would drift apart. Un-partitioned window bound: the bucket window
+    * reads one aggregate row per non-empty `valueCol div bucketWidth`
+    * bucket, at most (value range)/bucketWidth + 1 rows.
     */
   private[operators] def cumAboveMax(perValue: DataFrame, valueCol: String,
       maxCol: String, bucketWidth: Long = 1024L): DataFrame = {
@@ -1356,7 +1358,9 @@ object Eval {
     * or sources by construction, so the per-round collect is model-sized;
     * the lazy-lineage/checkpoint question disappears because each round's
     * plan starts from a literal local table. The final rank window is
-    * global but runs on the item table — a model, not data. Returns
+    * global but runs on the item table — a model, not data. Un-partitioned
+    * window bound: the driver-local strength table, one row per item, at
+    * most [[MaxBtItems]] rows (enforced before the first round). Returns
     * (item, strength_u, rank).
     */
   def bradleyTerry(games: DataFrame, winnerCol: String, loserCol: String,

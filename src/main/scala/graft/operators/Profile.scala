@@ -161,7 +161,10 @@ object Profile {
     * what flows through the one global-order window (bounded by value
     * cardinality, like a histogram's bins — not corpus rows; for
     * continuous ultra-high-cardinality columns, quantize first or use
-    * [[psiDrift]]). Returns one row (n_base, n_cur, d_stat).
+    * [[psiDrift]]). Un-partitioned window bound: the full outer join of
+    * the two distinct-value aggregates on the value, at most
+    * distinct(base) + distinct(cur) rows. Returns one row (n_base, n_cur,
+    * d_stat).
     */
   def ksDrift(base: DataFrame, cur: DataFrame,
       valueCol: String): DataFrame = {
@@ -2232,6 +2235,11 @@ object Profile {
     * per-row level explode feeds a map-side-combined count), one scan
     * filtered to the ≤k-row sample, one ≤k-row window — same
     * two-linear-scans shape as [[kllQuantile]], no global sort.
+    * Un-partitioned window bound: the level-l* sample, n_sample ≤ k rows
+    * by the choice of l* (the l* = 61 fallback keeps only rows with
+    * h < w). The bound comes from the sampling math, not the plan: both
+    * windows read the persisted corpus-sized base filtered through a
+    * nested-loop join with the one-row l* table.
     */
   def kllQuantileWeighted(df: DataFrame, valueCol: String,
       weightCol: String, idCol: String, k: Int,

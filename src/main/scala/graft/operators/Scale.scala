@@ -662,7 +662,8 @@ object Scale {
     * distributed hash aggregate; the waterfill itself runs on the m-row
     * stratum table (a windowed prefix sum over cardinality-of-strata rows —
     * the [[graft.operators.Profile.histogram]]-bins regime, nothing
-    * corpus-sized sorts globally). Deterministic ordering (capacity, then
+    * corpus-sized sorts globally). Un-partitioned window bound: the
+    * per-stratum aggregate, one row per distinct stratum. Deterministic ordering (capacity, then
     * stratum) makes the allocation engine-replayable.
     */
   def unimaxAllocate(df: DataFrame, stratumCol: String, tokenCol: Column,
@@ -861,7 +862,9 @@ object Scale {
     * ordered window over that histogram (the ksDrift posture: never over
     * keys, only over distinct counts), one final fold. Carrier: BIGINT
     * holds n·Σc to ~10¹⁸ — per-stratum audits beyond that, or swap the
-    * two products to DECIMAL(38,0).
+    * two products to DECIMAL(38,0). Un-partitioned window bound: the
+    * count-of-counts aggregate, one row per distinct per-key count; d
+    * distinct counts sum to at least d(d+1)/2 rows, so d ≤ √(2·total_rows).
     *
     * Returns one row: (n_keys, total_rows, max_count, p50_count,
     * top1_share_micro, gini_micro).

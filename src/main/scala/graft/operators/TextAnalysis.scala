@@ -2507,6 +2507,9 @@ object TextAnalysis {
     * intra-bucket window partitioned by bucket) — the same
     * mega-partition-proof cumsum [[Scale.domainTokenCap]] uses, so no
     * window ever sees more than max(bucketSize, n_docs/bucketSize) rows.
+    * Un-partitioned window bound: the bucket-total window reads one row
+    * per non-empty `doc div bucketSize` bucket, an aggregate of at most
+    * n_docs rows and n_docs/bucketSize + 1 for dense ids.
     */
   def heapsFit(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, sampleEvery: Long = 8L,

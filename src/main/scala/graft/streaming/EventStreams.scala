@@ -43,11 +43,6 @@ object EventStreams {
       .select(col("user_id"), col("w.start").as("sess_start"),
         col("w.end").as("sess_end"), col("n_events"), col("mn_value"))
 
-  /** Streaming variant of [[tumblingStats]] with a watermark bound on state. */
-  def streamingTumblingStats(stream: DataFrame, width: String,
-      watermark: String): DataFrame =
-    tumblingStats(stream.withWatermark("ts", watermark), width)
-
   /** The reference's monoid UDAF family as a windowed event-time aggregate:
     * element-wise array reduction per tumbling window. The monoid contract
     * (associative combine + identity — reference `src/monoid.rs:23-32`) is
@@ -64,14 +59,6 @@ object EventStreams {
       .agg(call_udf(reducer, col("arr")).as("red"))
       .select(col("w.start").as("win_start"), col("red"))
 
-  /** Streaming variant of [[tumblingArrayReduce]]: watermark-bounded window
-    * state, same UDAF merge path.
-    */
-  def streamingTumblingArrayReduce(stream: DataFrame, width: String,
-      watermark: String, arr: Column,
-      reducer: String = "array_reduce_sum_long"): DataFrame =
-    tumblingArrayReduce(stream.withWatermark("ts", watermark), width, arr, reducer)
-
   /** KMV distinct-count sketch per tumbling window — cardinality telemetry
     * (distinct users / sessions / keys per window) with O(k) state per
     * window instead of a distinct-set: the [[graft.functions.KmvBottomK]]
@@ -81,9 +68,9 @@ object EventStreams {
     * [[graft.operators.Profile.kmvDistinct]], so every output value —
     * sketch or not — replays in the DuckDB oracle.
     *
-    * Unified transform: batch GROUP BY here, watermarked window state via
-    * [[streamingWindowedKmv]] — the monoid merge path is identical, which
-    * is the point of a mergeable sketch.
+    * Unified transform: batch GROUP BY on a table, watermarked window state
+    * on `stream.withWatermark("ts", ...)` — the monoid merge path is
+    * identical, which is the point of a mergeable sketch.
     */
   def windowedKmv(events: DataFrame, width: String, key: Column,
       k: Int): DataFrame = {
@@ -101,13 +88,6 @@ object EventStreams {
           expr(s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) *" +
             " 1152921504606846976) div h_k AS BIGINT)")))
   }
-
-  /** Streaming variant of [[windowedKmv]]: watermark-bounded window state,
-    * same bottom-k merge path.
-    */
-  def streamingWindowedKmv(stream: DataFrame, width: String,
-      watermark: String, key: Column, k: Int): DataFrame =
-    windowedKmv(stream.withWatermark("ts", watermark), width, key, k)
 
   /** DuckDB replay of [[windowedKmv]] over the events table (ns → µs cast,
     * epoch-µs floor windows, per-window bottom-k via QUALIFY, identical
@@ -159,13 +139,6 @@ object EventStreams {
         col("s._1").as("v_zero"), col("s._2").as("t_fx"),
         col("s._3").as("est_raw"))
   }
-
-  /** Streaming variant of [[windowedHll]]: watermark-bounded window
-    * state, same register-merge path.
-    */
-  def streamingWindowedHll(stream: DataFrame, width: String,
-      watermark: String, key: Column, p: Int = 8): DataFrame =
-    windowedHll(stream.withWatermark("ts", watermark), width, key, p)
 
   /** DuckDB replay of [[windowedHll]] over the events table — per-window
     * register table via GROUP BY, the same fixed-point fold as
@@ -234,15 +207,6 @@ object EventStreams {
           col("pos").cast("int") + 1).as("q_pm"),
         col("col").as("est_v"), col("lvl"), col("n_sample"))
   }
-
-  /** Streaming variant of [[windowedKll]]: watermark-bounded window
-    * state, same sample-merge path.
-    */
-  def streamingWindowedKll(stream: DataFrame, width: String,
-      watermark: String, value: Column, id: Column, k: Int,
-      qPermille: Seq[Int]): DataFrame =
-    windowedKll(stream.withWatermark("ts", watermark), width, value, id,
-      k, qPermille)
 
   /** DuckDB replay of [[windowedKll]] over the events table — the
     * [[graft.operators.Profile.kllByOracleSql]] level/rank machinery
@@ -326,15 +290,6 @@ object EventStreams {
         col("t_total"))
   }
 
-  /** Streaming variant of [[windowedKllWeighted]]: watermark-bounded
-    * window state, same survivor-merge path.
-    */
-  def streamingWindowedKllWeighted(stream: DataFrame, width: String,
-      watermark: String, value: Column, weight: Column, id: Column,
-      k: Int, qPermille: Seq[Int]): DataFrame =
-    windowedKllWeighted(stream.withWatermark("ts", watermark), width,
-      value, weight, id, k, qPermille)
-
   /** DuckDB replay of [[windowedKllWeighted]] over the events table —
     * the [[graft.operators.Profile.kllWeightedByOracleSql]] survival/
     * rank machinery with the window start as the group.
@@ -400,8 +355,8 @@ object EventStreams {
     * window's distinct keys the counters never decrement, so the sketch
     * IS the exact per-window count table — the oracle-checkable regime
     * (the approximate regime's error bound is spec-tested in SketchSpec).
-    * Batch GROUP BY here; [[streamingWindowedTopK]] runs the same merge
-    * path against watermarked window state.
+    * Batch GROUP BY on a table; on a watermarked stream the same merge
+    * path runs against window state.
     */
   def windowedTopK(events: DataFrame, width: String, key: Column,
       k: Int, topN: Int): DataFrame = {
@@ -416,13 +371,6 @@ object EventStreams {
       .select(col("win_start"), (col("pos") + 1).cast("long").as("rank"),
         col("col._1").as("term"), col("col._2").as("cnt"))
   }
-
-  /** Streaming variant of [[windowedTopK]]: watermark-bounded window
-    * state, same counter-merge path.
-    */
-  def streamingWindowedTopK(stream: DataFrame, width: String,
-      watermark: String, key: Column, k: Int, topN: Int): DataFrame =
-    windowedTopK(stream.withWatermark("ts", watermark), width, key, k, topN)
 
   /** DuckDB replay of [[windowedTopK]]'s exact regime (k ≥ per-window
     * distinct keys): per-window counts, (cnt DESC, term) rank, top `topN`.

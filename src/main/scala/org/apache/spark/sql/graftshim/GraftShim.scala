@@ -56,28 +56,32 @@ object GraftShim {
       registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
     ext.registerFunctions(registry)
 
-  /** The `LogicalRDD` leaves of a checkpointed DataFrame's plan — the
-    * RDDs whose block-manager storage a `localCheckpoint` occupies.
-    * Checkpoint storage bypasses CacheManager (it is an RDD-level
-    * persist), so `spark.catalog.clearCache()` and `df.unpersist()` can
-    * never release it; lifecycle code needs the RDD itself.
-    */
-  def localCheckpointRdds(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.rdd.RDD[_]] = {
-    val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    classic.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-  }
-
   /** Release the block-manager storage behind a `localCheckpoint`'d
-    * DataFrame. No-op for plans without a `LogicalRDD`. Only safe once
-    * nothing will read the DataFrame again (a later action would fail on
-    * the missing checkpoint blocks, not recompute — the lineage was
+    * DataFrame: the `LogicalRDD` leaves of its plan. Checkpoint storage
+    * bypasses CacheManager (it is an RDD-level persist), so
+    * `spark.catalog.clearCache()` and `df.unpersist()` can never release
+    * it. No-op for plans without a `LogicalRDD`. Only safe once nothing
+    * will read the DataFrame again (a later action would fail on the
+    * missing checkpoint blocks, not recompute — the lineage was
     * truncated).
     */
   def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    localCheckpointRdds(df).foreach(_.unpersist(blocking = false))
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed.foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+
+  /** The RDDs the active SparkContext holds persisted for a
+    * `localCheckpoint` (their checkpoint data is local); empty when no
+    * context is active. `SparkContext.getActive` and `RDD.checkpointData`
+    * are private to Spark.
+    */
+  def activeLocalCheckpoints: Seq[org.apache.spark.rdd.RDD[_]] =
+    org.apache.spark.SparkContext.getActive.toSeq.flatMap(
+      _.getPersistentRDDs.values.filter(_.checkpointData.exists(
+        _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]])))
 
   /** Run `f` and return (result, total input records read by the jobs it
     * submitted) — listener-measured, draining the (private[spark])

@@ -11,25 +11,7 @@ class CachingSpec extends SparkSpec {
     (2L, "alpha beta gamma delta zeta"),
     (3L, "one two three four five six")).toDF("doc_id", "text")
 
-  test("scoped: operator persists are released at scope exit") {
-    // compare KEY SETS, not sizes: the async ContextCleaner can collect
-    // earlier suites' localCheckpoint RDDs mid-test, so absolute counts
-    // are flaky in a shared long-lived session — the contract is "nothing
-    // NEW survives the scope", not "the global count is frozen"
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = Caching.scoped {
-      // jaccardPairs persists its shingle table internally; count()
-      // materializes it inside the scope
-      Dedup.jaccardPairs(docs, "doc_id", "text", ngram = 2,
-        idWindow = 25L, threshold = 0.5).count()
-    }
-    assert(n == 1L) // docs 1-2 share 3 of 5 bigrams → J = 3/5
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"scope exit must unpersist what the operator persisted; leaked $leaked")
-  }
-
-  test("unscoped: pre-existing behavior — persists survive the call") {
+  test("persist: operator persists survive the call") {
     // key-set delta, not size: the async ContextCleaner can collect old
     // suites' RDDs mid-test (it removes keys, never adds), so NEW keys
     // are reliably the operator's own persist
@@ -38,23 +20,24 @@ class CachingSpec extends SparkSpec {
       idWindow = 25L, threshold = 0.5)
     assert(df.count() == 1L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
-      "outside a scope the operator's persist must stay (lazy callers)")
+      "the operator's persist must stay after the call (lazy callers)")
     spark.catalog.clearCache() // leave the suite session clean
   }
 
-  test("scoped: a pre-cached identical plan survives scope exit") {
-    // CacheManager shares entries by canonicalized plan — when the scoped
-    // operator's persist lands on a plan someone else already cached, the
-    // scope must NOT release that shared entry on exit
-    val base = docs.select(col("doc_id"), col("text"))
-    base.persist(); base.count()
+  test("checkpoint seam: reliable mode without a dir is a clear error") {
+    spark.conf.set("spark.graft.reliableCheckpoints", "true")
     try {
-      Caching.scoped {
-        Caching.persist(docs.select(col("doc_id"), col("text"))).count()
+      // only hit the seam when no dir is installed (an earlier suite may
+      // have set one on the shared context — then the contract is simply
+      // that the context's dir is used, which the equality test covers)
+      if (spark.sparkContext.getCheckpointDir.isEmpty) {
+        val e = intercept[IllegalArgumentException] {
+          Caching.checkpoint(docs.select(col("doc_id")))
+        }
+        assert(e.getMessage.contains("spark.checkpoint.dir"))
+        assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
       }
-      assert(org.apache.spark.sql.graftshim.GraftShim.isCached(base),
-        "scope exit must not unpersist an entry it did not create")
-    } finally base.unpersist(blocking = true)
+    } finally spark.conf.unset("spark.graft.reliableCheckpoints")
   }
 
   test("checkpoint seam: reliable mode equals localCheckpoint mode") {
@@ -65,40 +48,21 @@ class CachingSpec extends SparkSpec {
     import graft.operators.Graph
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L),
       (5L, 1L), (2L, 4L)).toDF("src", "dst")
-    def run() = Caching.scoped {
-      Graph.hits(edges, iters = 3)
-        .orderBy("side", "node").collect().map(_.toSeq).toSeq
-    }
+    def run() = Graph.hits(edges, iters = 3)
+      .orderBy("side", "node").collect().map(_.toSeq).toSeq
     val local = run()
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val reliable = run()
       assert(reliable == local,
         "reliable checkpoint mode must be value-identical to local mode")
       assert(local.nonEmpty)
-      assert(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliable mode must have installed the configured checkpoint dir")
-    } finally {
-      spark.conf.unset("spark.graft.reliableCheckpoints")
-      spark.conf.unset("spark.graft.checkpointDir")
-    }
-  }
-
-  test("checkpoint seam: reliable mode without a dir is a clear error") {
-    spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    try {
-      // only hit the seam when no dir is installed (an earlier test may
-      // have set one on the shared context — then the contract is simply
-      // that the existing dir is reused, which the equality test covers)
-      if (spark.sparkContext.getCheckpointDir.isEmpty) {
-        val e = intercept[IllegalArgumentException] {
-          Caching.checkpoint(docs.select(col("doc_id")))
-        }
-        assert(e.getMessage.contains("spark.graft.checkpointDir"))
-      }
+      assert(filesUnder(dir) > 0,
+        "reliable checkpoints must be written under the context's dir")
     } finally spark.conf.unset("spark.graft.reliableCheckpoints")
+    spark.catalog.clearCache()
   }
 
   test("releaseCheckpoints: frees localCheckpoint blocks that clearCache " +
@@ -131,29 +95,44 @@ class CachingSpec extends SparkSpec {
     Caching.releaseCheckpoints(blocking = true)
   }
 
-  test("scoped: nesting releases only the inner scope's entries") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Caching.scoped {
-      val outer = Dedup.jaccardPairs(docs, "doc_id", "text", ngram = 2,
-        idWindow = 25L, threshold = 0.5)
-      outer.count()
-      val afterOuter = spark.sparkContext.getPersistentRDDs.keySet
-      Caching.scoped {
-        Dedup.jaccardPairsChar(docs, "doc_id", "text",
-          n = 5, idWindow = 25L, threshold = 0.6).count()
-      }
-      // the inner scope's char-gram persist is gone, the outer's remains
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- afterOuter).isEmpty)
-      // "the outer's remains" asserted directly (not via count, which
-      // would pass by recompute): every RDD the outer scope created must
-      // still be registered — these are live cached entries, so the
-      // async ContextCleaner cannot collect them mid-test
-      val outerCreated = afterOuter -- before
-      assert(outerCreated.subsetOf(
-        spark.sparkContext.getPersistentRDDs.keySet),
-        "inner scope exit must not release the outer scope's entries")
-      assert(outer.count() == 1L)
+  test("releaseCheckpoints: drops lazy and eager local checkpoints, keeps " +
+      "CacheManager entries and plain RDD persists") {
+    // the release reads the SparkContext's persisted-RDD table, so it must
+    // pick out exactly the RDDs carrying local checkpoint data. Each step
+    // records its own key-set delta (the ContextCleaner only removes keys)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def addedBy(f: => Unit): Set[Int] = {
+      val before = persisted
+      f
+      (persisted -- before).toSet
     }
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    val cached = docs.select(col("doc_id"), upper(col("text")).as("u"))
+    val cachedIds = addedBy { cached.persist(); cached.count() }
+    val plain = spark.sparkContext.parallelize(1 to 10, 2)
+    val plainIds = addedBy { plain.persist(); plain.count() }
+    val lazyIds = addedBy {
+      Caching.checkpoint(docs.select((col("doc_id") * 2).as("d")))
+    }
+    val eagerIds = addedBy {
+      Caching.checkpoint(docs.select((col("doc_id") * 3).as("d")),
+        eager = true)
+    }
+    try {
+      Seq("CacheManager entry" -> cachedIds, "plain persist" -> plainIds,
+        "lazy localCheckpoint" -> lazyIds,
+        "eager localCheckpoint" -> eagerIds).foreach { case (what, ids) =>
+        assert(ids.nonEmpty, s"a $what must be listed as a persisted RDD")
+      }
+      Caching.releaseCheckpoints(blocking = true)
+      assert((lazyIds ++ eagerIds).intersect(persisted).isEmpty,
+        "the release must drop both local checkpoints")
+      assert((cachedIds ++ plainIds).subsetOf(persisted),
+        "the release must leave CacheManager entries and plain persists")
+      assert(org.apache.spark.sql.graftshim.GraftShim.isCached(cached))
+      assert(plain.getStorageLevel.useMemory)
+    } finally {
+      cached.unpersist(blocking = true)
+      plain.unpersist(blocking = true)
+    }
   }
 }

@@ -288,41 +288,25 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: reliable-checkpoint mode matches localCheckpoint") {
-    // the cluster-safe path: Caching.checkpoint's session confs switch
-    // every round to a storage-backed checkpoint (survives executor loss);
-    // the answer must be identical and checkpoint files must land under
-    // the context's checkpoint dir — an earlier suite may already have
-    // installed one, which reliable mode then reuses
+    // the cluster-safe path: spark.graft.reliableCheckpoints switches
+    // every round of Caching.checkpoint to a storage-backed checkpoint
+    // (survives executor loss) in the context's checkpoint dir; the answer
+    // must be identical and checkpoint files must land under that dir
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L)
     def families() = Dedup.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    def checkpointFiles(): Set[String] =
-      spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
-        val path = new org.apache.hadoop.fs.Path(d)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val files = scala.collection.mutable.Set.empty[String]
-        if (fs.exists(path)) {
-          val it = fs.listFiles(path, true)
-          while (it.hasNext) files += it.next().getPath.toString
-        }
-        files
-      }.toSet
     assert(families() == want)
-    val before = checkpointFiles()
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("spark.graft.reliableCheckpoints", "true")
-    spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       assert(families() == want)
-      assert((checkpointFiles() -- before).nonEmpty,
+      assert(filesUnder(dir) > 0,
         "expected reliable checkpoint files under the context's checkpoint dir")
-    } finally {
-      spark.conf.unset("spark.graft.reliableCheckpoints")
-      spark.conf.unset("spark.graft.checkpointDir")
-    }
+    } finally spark.conf.unset("spark.graft.reliableCheckpoints")
   }
 
   test("keepBest: best-quality member wins the family, ties to lower id") {

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.graftshim.GraftShim
 
@@ -16,6 +16,16 @@ import org.apache.spark.sql.graftshim.GraftShim
   * fails CI rather than a production run.
   */
 class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** The first node under `p` that is not a single-child operator (sort,
+    * exchange, projection, filter, window), or the first aggregate. */
+  private def below(p: SparkPlan): SparkPlan = p match {
+    case s: QueryStageExec => below(s.plan)
+    case r: ReusedExchangeExec => below(r.child)
+    case a: BaseAggregateExec => a
+    case u if u.children.size == 1 => below(u.children.head)
+    case other => other
+  }
 
   private def executed(name: String): (DataFrame, SparkPlan) = {
     // other suites cache tables; cache substitution would swap parquet scans
@@ -492,15 +502,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(rddScans.nonEmpty,
       "expected the checkpointed edge table as flat RDD scan leaves")
-    // the first node under the window that is not a sort, exchange or
-    // projection
-    def below(p: SparkPlan): SparkPlan = p match {
-      case s: QueryStageExec => below(s.plan)
-      case r: ReusedExchangeExec => below(r.child)
-      case a: BaseAggregateExec => a
-      case u if u.children.size == 1 => below(u.children.head)
-      case other => other
-    }
     val totals = collectWithSubqueries(plan) {
       case w: WindowExec if w.partitionSpec.isEmpty => below(w.child)
     }
@@ -513,6 +514,45 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           s"window total over an aggregate keyed on ${a.groupingExpressions}")
       case other =>
         fail(s"window total must run on a node aggregate, not ${other.nodeName}")
+    }
+  }
+
+  test("un-partitioned windows at the seven global-order sites read " +
+      "bounded inputs") {
+    // a window with no partition spec moves its whole input into one task,
+    // so each site's scaladoc states its input bound; the plan must carry
+    // it: every such window sits over an aggregate (rows = groups), or
+    // over a keyed join whose inputs each sit over one. Two sites differ:
+    // the Bradley-Terry rank window reads the driver-local strength table,
+    // which bradleyTerry's MaxBtItems require bounds; kllQuantileWeighted's
+    // windows read the corpus-sized base filtered through a nested-loop
+    // join with its one-row level table, so their ≤ k rows come from the
+    // sampling math and no plan property holds them
+    def input(p: SparkPlan): String = below(p) match {
+      case _: BaseAggregateExec => "aggregate"
+      case j: BaseJoinExec
+          if j.leftKeys.nonEmpty && j.children.forall(input(_) == "aggregate") =>
+        "aggregate"
+      case _: LocalTableScanExec =>
+        "local table"
+      case other => other.nodeName
+    }
+    val sites = Seq(
+      "q_text_heaps" -> "aggregate",        // TextAnalysis.heapsFit
+      "q_pipeline_skyline" -> "aggregate",  // Eval.cumAboveMax
+      "q_pipeline_elo" -> "local table",    // Eval.bradleyTerry
+      "q_pipeline_ks" -> "aggregate",       // Profile.ksDrift
+      "q_approx_kll_w" -> "BroadcastNestedLoopJoin", // Profile.kllQuantileWeighted
+      "q_pipeline_unimax" -> "aggregate",   // Scale.unimaxAllocate
+      "q_scale_skew" -> "aggregate")        // Scale.skewAudit
+    sites.foreach { case (q, want) =>
+      val (_, plan) = executed(q)
+      val inputs = collectWithSubqueries(plan) {
+        case w: WindowExec if w.partitionSpec.isEmpty => input(w.child)
+      }
+      assert(inputs.nonEmpty, s"$q must reach its un-partitioned window")
+      assert(inputs.forall(_ == want),
+        s"$q: un-partitioned windows over $inputs, expected $want")
     }
   }
 

@@ -29,4 +29,11 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Regular files anywhere under a local directory. */
+  def filesUnder(dir: String): Long = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
+    finally walk.close()
+  }
 }

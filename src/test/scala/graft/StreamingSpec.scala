@@ -30,7 +30,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
 
-    val q = EventStreams.streamingTumblingStats(stream, "15 minutes", "10 minutes")
+    val q = EventStreams.tumblingStats(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes")
       .writeStream.outputMode("complete")
       .format("memory").queryName("tumbling_out").start()
     try {
@@ -51,8 +52,8 @@ class StreamingSpec extends SparkSpec {
     val arr = array(col("user_id") % 3, col("value").cast("long"), lit(1L))
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingTumblingArrayReduce(
-        stream, "15 minutes", "10 minutes", arr)
+    val q = EventStreams.tumblingArrayReduce(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", arr)
       .writeStream.outputMode("complete")
       .format("memory").queryName("reduce_out").start()
     try {
@@ -74,8 +75,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedKmv(
-        stream, "15 minutes", "10 minutes", col("user_id"), k = 4)
+    val q = EventStreams.windowedKmv(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", col("user_id"),
+        k = 4)
       .writeStream.outputMode("complete")
       .format("memory").queryName("kmv_out").start()
     try {
@@ -100,8 +102,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedHll(
-        stream, "15 minutes", "10 minutes", col("user_id"), p = 8)
+    val q = EventStreams.windowedHll(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", col("user_id"),
+        p = 8)
       .writeStream.outputMode("complete")
       .format("memory").queryName("hll_out").start()
     try {
@@ -133,9 +136,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedKll(
-        stream, "15 minutes", "10 minutes", col("value"), col("user_id"),
-        k = 16, qPermille = Seq(500, 1000))
+    val q = EventStreams.windowedKll(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", col("value"),
+        col("user_id"), k = 16, qPermille = Seq(500, 1000))
       .writeStream.outputMode("complete")
       .format("memory").queryName("kll_out").start()
     try {
@@ -164,9 +167,9 @@ class StreamingSpec extends SparkSpec {
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
     // weight = user_id + 1 (deterministic small integers ≥ 1)
     val wcol = col("user_id") + lit(1L)
-    val q = EventStreams.streamingWindowedKllWeighted(
-        stream, "15 minutes", "10 minutes", col("value"), wcol,
-        col("user_id") * lit(100L) + col("value").cast("long"),
+    val q = EventStreams.windowedKllWeighted(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", col("value"),
+        wcol, col("user_id") * lit(100L) + col("value").cast("long"),
         k = 16, qPermille = Seq(500, 1000))
       .writeStream.outputMode("complete")
       .format("memory").queryName("kllw_out").start()
@@ -195,9 +198,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedTopK(
-        stream, "15 minutes", "10 minutes", col("event_type"), k = 4,
-        topN = 2)
+    val q = EventStreams.windowedTopK(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes",
+        col("event_type"), k = 4, topN = 2)
       .writeStream.outputMode("complete")
       .format("memory").queryName("topk_out").start()
     try {
@@ -536,7 +539,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingTumblingStats(stream, "15 minutes", "10 minutes")
+    val q = EventStreams.tumblingStats(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes")
       .writeStream.outputMode("append")
       .format("memory").queryName("late_out").start()
     try {
@@ -558,12 +562,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("watermark drops late events from streamingWindowedKmv") {
+  test("watermark drops late events from windowedKmv") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedKmv(
-        stream, "15 minutes", "10 minutes", col("user_id"), k = 8)
+    val q = EventStreams.windowedKmv(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes", col("user_id"),
+        k = 8)
       .writeStream.outputMode("append")
       .format("memory").queryName("kmv_late_out").start()
     try {
@@ -586,13 +591,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("watermark drops late events from streamingWindowedTopK") {
+  test("watermark drops late events from windowedTopK") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val stream = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = EventStreams.streamingWindowedTopK(
-        stream, "15 minutes", "10 minutes", col("event_type"), k = 8,
-        topN = 3)
+    val q = EventStreams.windowedTopK(
+        stream.withWatermark("ts", "10 minutes"), "15 minutes",
+        col("event_type"), k = 8, topN = 3)
       .writeStream.outputMode("append")
       .format("memory").queryName("topk_late_out").start()
     try {
