@@ -19,15 +19,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * (reference `src/monoid.rs:472-526`), done at the session-extension
   * seam instead of per-notebook `registerAll` calls.
   *
-  * Injected here are the engine-grade `TypedImperativeAggregate`
-  * implementations ([[graft.functions.ArrayReduceAgg]]): real Catalyst
-  * expressions, so `injectFunction` is the honest registration tier for
-  * them (analysis-time element-type resolution, ObjectHashAggregate
-  * two-phase protocol). The Aggregator/udaf families
-  * (`array_reduce_sum` et al., sketches) live on the UDF registry and
-  * keep their per-session `registerAll`/`register` path — `udaf()`
-  * wrappers are not `Seq[Expression] => Expression` builders, which is
-  * exactly the distinction between the two registration surfaces.
+  * Injected here is every `array_reduce_*` name, from the one list
+  * [[graft.functions.ArrayReduceAgg.sqlBuilders]]: each is a
+  * `Seq[Expression] => Expression` builder over the Catalyst
+  * `TypedImperativeAggregate` [[graft.functions.ArrayReduceAgg]], so the
+  * reference names resolve in a SQL-only deployment too. The sketch
+  * families are `udaf()` wrappers, not expression builders, and keep their
+  * per-session `register` path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

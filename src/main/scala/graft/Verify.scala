@@ -26,6 +26,9 @@ object Verify {
     }
     val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
     selected.foreach { case (name, fn) =>
+      // marks the log: an executor error with no query name falls after
+      // the marker of the query that ran it
+      System.err.println(s"[verify] start $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

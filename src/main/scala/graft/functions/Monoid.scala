@@ -1,34 +1,23 @@
 package graft.functions
 
-/** A monoid: a binary associative operator with an identity element.
-  *
-  * Mirrors the reference's `MonoidOp` trait (reference `src/monoid.rs:23-32`):
-  * `identity()`, `combine(a, b)`, `name()`. Associativity is the contract that
-  * makes distributed (partial → shuffle → final) aggregation correct; it is
-  * property-tested in `MonoidLawsSpec`.
-  *
-  * The reference supports 10 Arrow primitive types (`src/monoid.rs:34-37`),
-  * including unsigned ints. The JVM has no unsigned primitives, so the
-  * unsigned types ride on wider signed carriers (or BigDecimal for u64),
-  * clamped to their unsigned range (README §2a).
-  */
-trait Monoid[T] extends Serializable {
-  def identity: T
-  def combine(a: T, b: T): T
-  /** Short op name used to build the SQL function name `array_reduce_{name}`. */
-  def name: String
-}
-
-/** The reference's op × type matrix (reference `src/monoid.rs:85-221`), the
-  * one table both `array_reduce_*` tiers read:
+/** The reference's op × type matrix (reference `src/monoid.rs:85-221`) as
+  * the folds [[ArrayReduceAgg]] runs. A monoid is a binary associative
+  * operator with an identity (the reference's `MonoidOp` trait,
+  * `src/monoid.rs:23-32`); associativity is the contract that makes
+  * distributed (partial → shuffle → final) aggregation correct, and
+  * `MonoidLawsSpec` property-tests it on these folds.
   *   - sum: identity 0, integers saturate (`saturating_add`), floats plain `+`
   *   - product: identity 1, integers saturate (`saturating_mul`), floats `*`
   *   - max: identity = type minimum (floats: -Infinity)
   *   - min: identity = type maximum (floats: +Infinity)
   *
-  * Each integral type is a `[lo, hi]` range on one Long fold, the float
-  * types share one Double fold; [[ArrayReduceAgg]] folds on these carriers
-  * directly, and the per-type factories wrap them for [[ArrayMonoidReduce]].
+  * The reference supports 10 Arrow primitive types (`src/monoid.rs:34-37`).
+  * Each signed integral type and the unsigned `u8`, `u16`, `u32` is a
+  * `[lo, hi]` range on one Long fold; `u64` folds on the bits of a Long
+  * read as unsigned; `double` and `float` share one Double fold, `float`
+  * rounding back to f32 after every combine. Each fold is a
+  * `(identity, combine)` pair on a primitive carrier, which Function2
+  * specializes, so a caller's inner loop never boxes.
   */
 object Monoid {
 
@@ -53,8 +42,6 @@ object Monoid {
   /** `op` on a Long carrier saturating at `[lo, hi]`, exactly Rust's
     * saturating ops at the bounds. Where two in-range values cannot overflow
     * Long, the plain operator and one clamp; elsewhere the checked operator.
-    * The combine stays a `(Long, Long) => Long`, which Function2
-    * specializes, so a caller's inner loop never boxes.
     */
   def longFold(op: String, lo: Long, hi: Long): (Long, (Long, Long) => Long) = {
     val full = lo == Long.MinValue && hi == Long.MaxValue
@@ -72,6 +59,29 @@ object Monoid {
     }
   }
 
+  /** High 64 bits of the unsigned 128-bit product `a × b`
+    * (`Math.unsignedMultiplyHigh` from Java 18 on): the signed high word
+    * plus, for each negative factor, the other factor.
+    */
+  private def unsignedMultiplyHigh(a: Long, b: Long): Long =
+    Math.multiplyHigh(a, b) + ((a >> 63) & b) + ((b >> 63) & a)
+
+  /** `op` on u64 values carried as the bits of a Long, saturating at
+    * `[0, 2^64-1]` like Rust's `u64` ops: a sum saturates on an unsigned
+    * carry, a product when its unsigned high word is non-zero, and max/min
+    * compare unsigned. `-1L` is `u64::MAX`.
+    */
+  def u64Fold(op: String): (Long, (Long, Long) => Long) = op match {
+    case "sum" => (0L, (a, b) => {
+      val s = a + b
+      if (java.lang.Long.compareUnsigned(s, a) < 0) -1L else s
+    })
+    case "product" => (1L, (a, b) => if (unsignedMultiplyHigh(a, b) != 0L) -1L else a * b)
+    case "max" => (0L, (a, b) => if (java.lang.Long.compareUnsigned(a, b) >= 0) a else b)
+    case "min" => (-1L, (a, b) => if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b)
+    case _ => throw new IllegalArgumentException(s"no monoid $op")
+  }
+
   /** `op` on the Double carrier: IEEE `+`/`*`, ±Infinity max/min identities. */
   def doubleFold(op: String): (Double, (Double, Double) => Double) = op match {
     case "sum" => (0.0, _ + _)
@@ -81,51 +91,11 @@ object Monoid {
     case _ => throw new IllegalArgumentException(s"no monoid $op")
   }
 
-  private def inst[T](id: T, nm: String)(f: (T, T) => T): Monoid[T] =
-    new Monoid[T] {
-      val identity: T = id
-      def combine(a: T, b: T): T = f(a, b)
-      val name: String = nm
-    }
-
-  // Integral carriers. The unsigned types (reference src/monoid.rs
-  // supports u8-u64) ride on Int (u8, u16) and Long (u32), clamped to
-  // [0, 2^bits-1] — Rust's unsigned saturating_add/mul exactly.
-  def byte(op: String): Monoid[Byte] = longFold(op, Byte.MinValue, Byte.MaxValue) match {
-    case (id, f) => inst(id.toByte, op)((a, b) => f(a, b).toByte)
-  }
-  def short(op: String): Monoid[Short] = longFold(op, Short.MinValue, Short.MaxValue) match {
-    case (id, f) => inst(id.toShort, op)((a, b) => f(a, b).toShort)
-  }
-  private def onInt(op: String, lo: Long, hi: Long): Monoid[Int] = longFold(op, lo, hi) match {
-    case (id, f) => inst(id.toInt, op)((a, b) => f(a, b).toInt)
-  }
-  def int(op: String): Monoid[Int] = onInt(op, Int.MinValue, Int.MaxValue)
-  def u8(op: String): Monoid[Int] = onInt(op, 0L, 255L)
-  def u16(op: String): Monoid[Int] = onInt(op, 0L, 65535L)
-  private def onLong(op: String, lo: Long, hi: Long): Monoid[Long] =
-    longFold(op, lo, hi) match { case (id, f) => inst(id, op)(f) }
-  def long(op: String): Monoid[Long] = onLong(op, Long.MinValue, Long.MaxValue)
-  def u32(op: String): Monoid[Long] = onLong(op, 0L, 4294967295L)
-
-  // Float folds in Double and rounds back after every combine: bit-identical
-  // to f32 `+`/`*` (53 ≥ 2·24+2 makes the double rounding innocuous), exact
-  // for max/min.
-  def double(op: String): Monoid[Double] = doubleFold(op) match { case (id, f) => inst(id, op)(f) }
-  def float(op: String): Monoid[Float] = doubleFold(op) match {
-    case (id, f) => inst(id.toFloat, op)((a, b) => f(a, b).toFloat)
-  }
-
-  // u64 on an exact BigDecimal carrier (Spark DecimalType(38,18): 20
-  // integral digits ≥ the 20 digits of u64::MAX), clamped to [0, 2^64-1].
-  val maxU64Value: BigDecimal = BigDecimal("18446744073709551615")
-  @inline private def clampU64(v: BigDecimal): BigDecimal =
-    if (v > maxU64Value) maxU64Value else if (v < 0) BigDecimal(0) else v
-  def u64(op: String): Monoid[BigDecimal] = op match {
-    case "sum" => inst(BigDecimal(0), op)((a, b) => clampU64(a + b))
-    case "product" => inst(BigDecimal(1), op)((a, b) => clampU64(a * b))
-    case "max" => inst(BigDecimal(0), op)((a, b) => if (a >= b) a else b)
-    case "min" => inst(maxU64Value, op)((a, b) => if (a <= b) a else b)
-    case _ => throw new IllegalArgumentException(s"no monoid $op")
+  /** `op` on f32 values in the Double carrier: the Double fold rounded back
+    * to f32 after every combine, bit-identical to f32 `+`/`*` (53 ≥ 2·24+2
+    * makes the double rounding innocuous) and exact for max/min.
+    */
+  def floatFold(op: String): (Double, (Double, Double) => Double) = doubleFold(op) match {
+    case (id, f) => (id, (a, b) => f(a, b).toFloat.toDouble)
   }
 }

@@ -3,16 +3,16 @@ package graft.queries
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Oracle-checked queries exercising the `array_reduce_*` UDAF family over
+/** Oracle-checked queries exercising the `array_reduce_*` family over
   * the driver's parquet tables (the reference's whole operator surface,
   * SURVEY.md §2a, driven through SQL exactly like the reference's tests drive
   * DataFusion, reference `src/monoid.rs:569`).
   *
-  * Result shape: the UDAF produces an `ArrayType` column (one reduced array
+  * Result shape: the aggregate produces an `ArrayType` column (one reduced array
   * per group, reference `src/monoid.rs:402`), which the driver's comparator
   * cannot hash (array cells are unhashable in its pandas sort). Every query
   * therefore `posexplode`s the reduced array into `(group, pos, value)`
-  * scalar rows — the UDAF still runs in full; only the dump shape changes.
+  * scalar rows — the aggregate still runs in full; only the dump shape changes.
   * `pos` is 1-based BIGINT to match DuckDB `generate_subscripts`.
   *
   * Oracle notes (SURVEY.md §7 "hard parts"):
@@ -32,9 +32,9 @@ object MonoidQueries {
 
   /** Wraps an aggregate-to-array subquery so the result is scalar rows.
     * `castTo` optionally re-types the exploded element for the dump only
-    * (the UDAF's internal carrier type is untouched) — used by the u64
-    * query, whose DECIMAL(38,18) dump representation the driver's
-    * comparator hashes differently from DuckDB's even when values match.
+    * (the aggregate's carrier is untouched) — used by the u64 query, whose
+    * decimal dump representation the driver's comparator hashes
+    * differently from DuckDB's even when values match.
     */
   private def exploded(key: String, valCol: String, agg: String,
                        castTo: String = ""): String = {
@@ -92,16 +92,14 @@ object MonoidQueries {
         |  FROM embeddings GROUP BY label)
         |LATERAL VIEW posexplode(ssum) AS pos, elem""".stripMargin)),
 
-    // u64 emulation on the DecimalType carrier (the 10th reference element
-    // type; reference src/monoid.rs:34-37) — exact unsigned-64 arithmetic.
-    // Runs over customer (the smallest keyed table): the BigDecimal path is
-    // the exactness tier, deliberately off the primitive fast path —
-    // int/native variants cover throughput on the big table, and BigDecimal
-    // allocation churn was the bench's most noise-amplified cost.
-    // Dump is CAST to BIGINT (values are small exact integers): the
-    // DECIMAL(38,18) textual form hash-mismatched the DuckDB oracle even
-    // with identical values (ADVICE r02); the UDAF still aggregates on the
-    // Decimal carrier internally.
+    // u64 (the 10th reference element type; reference src/monoid.rs:34-37):
+    // the DECIMAL(38,18) input is cast to the function's decimal(20,0) and
+    // folds as unsigned 64-bit Longs. Runs over customer (the smallest keyed
+    // table): each element read goes through a decimal, so int/native
+    // variants cover throughput on the big table.
+    // Dump is CAST to BIGINT (values are small exact integers): a decimal
+    // textual form hash-mismatched the DuckDB oracle even with identical
+    // values (ADVICE r02).
     "q_array_sum_u64" -> ((s, d) => q(s, d, exploded("c_nationkey", "arr_sum",
       """SELECT c_nationkey, array_reduce_sum_u64(arr) AS arr_sum FROM (
         |  SELECT c_nationkey,
@@ -129,7 +127,7 @@ object MonoidQueries {
         |  FROM embeddings GROUP BY label)
         |LATERAL VIEW posexplode(csum) AS pos, elem""".stripMargin)),
 
-    // the native TypedImperativeAggregate path (type inferred from input)
+    // the native name (element type taken from the input, no cast)
     "q_array_sum_native" -> ((s, d) => q(s, d, exploded("l_orderkey", "arr_sum",
       """SELECT l_orderkey, array_reduce_sum_native(arr) AS arr_sum FROM (
         |  SELECT l_orderkey,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Parquet source layer over the driver's TPC-H-ish test data (TESTDATA.md).
   *
   * Registers one temp view per table for SQL-based queries, plus the
-  * `array_reduce_*` UDAF family (≈ the reference's `register_table` +
-  * `register_udaf` session setup, reference `src/monoid.rs:540-566`).
+  * `array_reduce_*` functions and the sketch UDAFs (≈ the reference's
+  * `register_table` + `register_udaf` session setup, reference
+  * `src/monoid.rs:540-566`).
   * Idempotent; call at the top of every `SparkEntry.queries` entry.
   */
 object Tables {
@@ -88,7 +89,6 @@ object Tables {
   def load(spark: SparkSession, dir: String): Unit = synchronized {
     if (activeDir.get(spark) != dir) {
       configure(spark)
-      graft.functions.ArrayReduce.registerAll(spark)
       graft.functions.ArrayReduceAgg.register(spark)
       graft.functions.SimHash.register(spark)
       graft.functions.ApproxTopK.register(spark)

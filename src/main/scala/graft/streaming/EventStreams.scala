@@ -47,8 +47,9 @@ object EventStreams {
     * element-wise array reduction per tumbling window. The monoid contract
     * (associative combine + identity — reference `src/monoid.rs:23-32`) is
     * exactly what incremental window-state merging requires, so the SAME
-    * `Aggregator` runs unchanged here: per-micro-batch partial buffers fold
-    * into window state the way per-partition partials fold in batch.
+    * [[graft.functions.ArrayReduceAgg]] runs unchanged here:
+    * per-micro-batch partial buffers fold into window state the way
+    * per-partition partials fold in batch.
     * `reducer` is any registered `array_reduce_*` SQL name; `arr` is the
     * array-valued expression to reduce.
     */

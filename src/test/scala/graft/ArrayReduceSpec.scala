@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ArrayMonoidReduce, Monoid}
+import graft.functions.{ArrayMonoidReduce, MonoidOp}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -160,6 +160,13 @@ class ArrayReduceSpec extends SparkSpec {
     assert(spark.sql("SELECT array_reduce_sum_long(arrays) AS r FROM test_l")
       .collect()(0).getSeq[Long](0) == Seq(Long.MaxValue, 3L))
 
+    // an int array is widened to bigint before the fold, so the sum passes
+    // Int.MaxValue without saturating
+    Seq(Seq(Int.MaxValue, 1), Seq(1, 2)).toDF("arrays").createOrReplaceTempView("test_il")
+    val widened = spark.sql("SELECT array_reduce_sum_long(arrays) AS r FROM test_il")
+    assert(widened.schema.head.dataType == ArrayType(LongType, containsNull = false))
+    assert(widened.collect()(0).getSeq[Long](0) == Seq(2147483648L, 3L))
+
     val dfS = spark.createDataFrame(
       java.util.List.of(Row(Seq[Short](100, 200)), Row(Seq[Short](32700, 300))),
       StructType(Seq(StructField("arrays", ArrayType(ShortType)))))
@@ -168,7 +175,7 @@ class ArrayReduceSpec extends SparkSpec {
       .collect()(0).getSeq[Short](0) == Seq[Short](32767, 500))
   }
 
-  // Spark hands the Aggregator each array as a linked List, so `reduce`
+  // Spark hands the model Aggregator each array as a linked List, so `reduce`
   // must walk it once and never index it (an indexed loop is O(width²)
   // per row). A Seq whose `apply` throws pins "traverse, never index".
   test("reduce walks each input once, never indexes it") {
@@ -178,7 +185,7 @@ class ArrayReduceSpec extends SparkSpec {
         def length: Int = xs.length
         def iterator: Iterator[Option[Int]] = xs.iterator
       }
-    val agg = new ArrayMonoidReduce[Int](Monoid.int("sum"))
+    val agg = new ArrayMonoidReduce[Int](MonoidOp.int("sum"))
     val w = 1024
     val rows: Seq[List[Option[Int]]] = Seq(
       List.tabulate(w)(j => if (j % 7 == 0) None else Some(j)),

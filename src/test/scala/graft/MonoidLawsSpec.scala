@@ -6,12 +6,15 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests of the monoid laws — identity, associativity, and
-  * split-invariance of the fold. Associativity is the contract that makes
-  * Spark's partial → shuffle → final aggregation of [[ArrayMonoidReduce]]
-  * correct at any parallelism (SURVEY.md §5c); the reference relies on it
-  * implicitly via `merge_batch` (reference src/monoid.rs:445-465).
+  * split-invariance of the fold — on the `(identity, combine)` folds of
+  * [[Monoid]] that `ArrayReduceAgg` runs. Associativity is the contract
+  * that makes Spark's partial → shuffle → final aggregation correct at any
+  * parallelism (SURVEY.md §5c); the reference relies on it implicitly via
+  * `merge_batch` (reference src/monoid.rs:445-465).
   */
 class MonoidLawsSpec extends AnyFunSuite {
+
+  private type Fold[T] = (T, (T, T) => T)
 
   /** Run a ScalaCheck property under ScalaTest (scalatestplus bridge is not
     * on the offline classpath, so drive scalacheck's Test runner directly).
@@ -21,17 +24,18 @@ class MonoidLawsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  private def laws[T](name: String, m: Monoid[T], gen: Gen[T],
+  private def laws[T](name: String, m: Fold[T], gen: Gen[T],
       eq: (T, T) => Boolean = (a: T, b: T) => a == b,
       maxLen: Int = 100): Unit = {
+    val (identity, combine) = m
     test(s"$name: identity") {
       check(forAll(gen) { a =>
-        eq(m.combine(a, m.identity), a) && eq(m.combine(m.identity, a), a)
+        eq(combine(a, identity), a) && eq(combine(identity, a), a)
       })
     }
     test(s"$name: associativity") {
       check(forAll(gen, gen, gen) { (a, b, c) =>
-        eq(m.combine(m.combine(a, b), c), m.combine(a, m.combine(b, c)))
+        eq(combine(combine(a, b), c), combine(a, combine(b, c)))
       })
     }
     test(s"$name: split-invariance (any partitioning folds equal)") {
@@ -39,10 +43,10 @@ class MonoidLawsSpec extends AnyFunSuite {
       check(forAll(listGen, Gen.chooseNum(0, 100)) { (xs, cut0) =>
         val cut = if (xs.isEmpty) 0 else cut0 % (xs.length + 1)
         val (l, r) = xs.splitAt(cut)
-        val whole = xs.foldLeft(m.identity)(m.combine)
-        val split = m.combine(
-          l.foldLeft(m.identity)(m.combine),
-          r.foldLeft(m.identity)(m.combine))
+        val whole = xs.foldLeft(identity)(combine)
+        val split = combine(
+          l.foldLeft(identity)(combine),
+          r.foldLeft(identity)(combine))
         eq(whole, split)
       })
     }
@@ -53,76 +57,94 @@ class MonoidLawsSpec extends AnyFunSuite {
   // is a deliberate deviation from the pure monoid). Test int sum/product on
   // ranges where saturation cannot trigger, and the bounds behavior
   // separately in ArrayReduceSpec.
-  laws("sumInt", Monoid.int("sum"), Gen.chooseNum(-1000000, 1000000))
+  private def int(op: String): Fold[Long] = Monoid.longFold(op, Int.MinValue, Int.MaxValue)
+  private def long(op: String): Fold[Long] = Monoid.longFold(op, Long.MinValue, Long.MaxValue)
+  laws("sumInt", int("sum"), Gen.chooseNum(-1000000L, 1000000L))
   // product lists capped at 8 elements: |v| <= 10 and n <= 8 keeps |prod| <=
   // 10^8 < Int.MaxValue, so saturation (which genuinely breaks
   // split-invariance for signed products: [10]*10 :+ -1 folds to -MaxValue
   // whole but MinValue split) cannot trigger — same caveat as the reference's
   // saturating_mul, covered separately in the bounds test below
-  laws("productInt", Monoid.int("product"), Gen.chooseNum(-10, 10), maxLen = 8)
-  laws("sumLong", Monoid.long("sum"), Gen.chooseNum(-1000000L, 1000000L))
-  laws("maxInt (full range incl. bounds)", Monoid.int("max"), Gen.chooseNum(Int.MinValue, Int.MaxValue))
-  laws("minInt (full range incl. bounds)", Monoid.int("min"), Gen.chooseNum(Int.MinValue, Int.MaxValue))
-  laws("maxLong", Monoid.long("max"), Gen.chooseNum(Long.MinValue, Long.MaxValue))
-  laws("minByte", Monoid.byte("min"), Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
-  laws("maxShort", Monoid.short("max"), Gen.chooseNum(Short.MinValue, Short.MaxValue))
+  laws("productInt", int("product"), Gen.chooseNum(-10L, 10L), maxLen = 8)
+  laws("sumLong", long("sum"), Gen.chooseNum(-1000000L, 1000000L))
+  laws("maxInt (full range incl. bounds)", int("max"),
+    Gen.chooseNum(Int.MinValue.toLong, Int.MaxValue.toLong))
+  laws("minInt (full range incl. bounds)", int("min"),
+    Gen.chooseNum(Int.MinValue.toLong, Int.MaxValue.toLong))
+  laws("maxLong", long("max"), Gen.chooseNum(Long.MinValue, Long.MaxValue))
+  laws("minByte", Monoid.longFold("min", Byte.MinValue, Byte.MaxValue),
+    Gen.chooseNum(Byte.MinValue.toLong, Byte.MaxValue.toLong))
+  laws("maxShort", Monoid.longFold("max", Short.MinValue, Short.MaxValue),
+    Gen.chooseNum(Short.MinValue.toLong, Short.MaxValue.toLong))
 
   // Float max/min are exactly associative (no rounding); NaN excluded —
   // the reference's f32::max propagates NaN asymmetrically, same as JVM.
-  laws("maxFloat", Monoid.float("max"), Gen.chooseNum(-1e30f, 1e30f))
-  laws("minDouble", Monoid.double("min"), Gen.chooseNum(-1e300, 1e300))
+  laws("maxFloat", Monoid.floatFold("max"), Gen.chooseNum(-1e30f, 1e30f).map(_.toDouble))
+  laws("minDouble", Monoid.doubleFold("min"), Gen.chooseNum(-1e300, 1e300))
 
-  // u64 on the BigDecimal carrier: lawful in non-saturating ranges, exact
-  laws("sumU64", Monoid.u64("sum"),
-    Gen.chooseNum(0L, 1000000L).map(BigDecimal(_)))
-  laws("maxU64 (full u64 range)", Monoid.u64("max"),
-    Gen.chooseNum(0L, Long.MaxValue).map(v => BigDecimal(v) * 2))
-  laws("minU64 (full u64 range)", Monoid.u64("min"),
-    Gen.chooseNum(0L, Long.MaxValue).map(v => BigDecimal(v) * 2))
+  // u64 on the unsigned-Long carrier (a Long's bits read as unsigned):
+  // lawful in non-saturating ranges; max/min over every bit pattern
+  laws("sumU64", Monoid.u64Fold("sum"), Gen.chooseNum(0L, 1000000L))
+  laws("maxU64 (full u64 range)", Monoid.u64Fold("max"),
+    Gen.chooseNum(Long.MinValue, Long.MaxValue))
+  laws("minU64 (full u64 range)", Monoid.u64Fold("min"),
+    Gen.chooseNum(Long.MinValue, Long.MaxValue))
+
+  private def unsigned(v: Long): BigInt = BigInt(java.lang.Long.toUnsignedString(v))
+  private val maxU64 = BigInt(2).pow(64) - 1
 
   test("u64 saturation clamps exactly at [0, 2^64-1]") {
-    val max = Monoid.maxU64Value
-    assert(Monoid.u64("sum").combine(max, BigDecimal(1)) == max)
-    assert(Monoid.u64("sum").combine(max - 1, BigDecimal(1)) == max)
-    assert(Monoid.u64("product").combine(max, BigDecimal(2)) == max)
-    assert(Monoid.u64("min").identity == max) // identity = u64::MAX
-    assert(Monoid.u64("max").identity == BigDecimal(0)) // identity = u64::MIN
+    def combine(op: String, a: BigInt, b: BigInt): BigInt =
+      unsigned(Monoid.u64Fold(op)._2(a.longValue, b.longValue))
+    assert(unsigned(-1L) == maxU64)
+    assert(combine("sum", maxU64, 1) == maxU64)
+    assert(combine("sum", maxU64 - 1, 1) == maxU64)
+    assert(combine("product", maxU64, 2) == maxU64)
+    assert(unsigned(Monoid.u64Fold("min")._1) == maxU64) // identity = u64::MAX
+    assert(unsigned(Monoid.u64Fold("max")._1) == 0) // identity = u64::MIN
   }
 
   test("saturation clamps exactly at the Rust bounds") {
-    assert(Monoid.int("sum").combine(Int.MaxValue, 1) == Int.MaxValue)
-    assert(Monoid.int("sum").combine(Int.MinValue, -1) == Int.MinValue)
-    assert(Monoid.int("product").combine(Int.MaxValue, 2) == Int.MaxValue)
-    assert(Monoid.int("product").combine(Int.MaxValue, -2) == Int.MinValue)
-    assert(Monoid.int("product").combine(Int.MinValue, -1) == Int.MaxValue)
-    assert(Monoid.long("sum").combine(Long.MaxValue, 1L) == Long.MaxValue)
-    assert(Monoid.long("sum").combine(Long.MinValue, -1L) == Long.MinValue)
-    assert(Monoid.long("product").combine(Long.MaxValue, 2L) == Long.MaxValue)
-    assert(Monoid.long("product").combine(Long.MinValue, -1L) == Long.MaxValue)
-    assert(Monoid.byte("sum").combine(127.toByte, 1.toByte) == 127.toByte)
-    assert(Monoid.short("sum").combine(Short.MinValue, (-5).toShort) == Short.MinValue)
+    assert(int("sum")._2(Int.MaxValue, 1) == Int.MaxValue)
+    assert(int("sum")._2(Int.MinValue, -1) == Int.MinValue)
+    assert(int("product")._2(Int.MaxValue, 2) == Int.MaxValue)
+    assert(int("product")._2(Int.MaxValue, -2) == Int.MinValue)
+    assert(int("product")._2(Int.MinValue, -1) == Int.MaxValue)
+    assert(long("sum")._2(Long.MaxValue, 1L) == Long.MaxValue)
+    assert(long("sum")._2(Long.MinValue, -1L) == Long.MinValue)
+    assert(long("product")._2(Long.MaxValue, 2L) == Long.MaxValue)
+    assert(long("product")._2(Long.MinValue, -1L) == Long.MaxValue)
+    assert(Monoid.longFold("sum", Byte.MinValue, Byte.MaxValue)._2(127, 1) == 127)
+    assert(Monoid.longFold("sum", Short.MinValue, Short.MaxValue)._2(Short.MinValue, -5) ==
+      Short.MinValue)
   }
 
   // --- the op × type table against exact arithmetic: every integral
   // carrier × op, combine = BigInt arithmetic clamped to the carrier's
   // [lo, hi], on random in-range values and on lo, hi, 0, ±1 and 2 (hi × hi
-  // overflows Long for u32 product, which must still give hi) ---
-  private case class Carrier[T](name: String, m: String => Monoid[T],
-      lo: Long, hi: Long, of: Long => T, big: T => BigInt)
+  // overflows Long for u32 product, which must still give hi). Each
+  // carrier is the fold ArrayReduceAgg runs for that element type; a
+  // carrier value reads as a BigInt through `big` (unsigned for u64) ---
+  private case class Carrier(name: String, m: String => Fold[Long],
+      lo: BigInt, hi: BigInt, big: Long => BigInt = BigInt(_))
+
+  private def ranged(name: String, lo: Long, hi: Long): Carrier =
+    Carrier(name, Monoid.longFold(_, lo, hi), BigInt(lo), BigInt(hi))
 
   private val carriers = Seq(
-    Carrier[Byte]("byte", Monoid.byte, Byte.MinValue, Byte.MaxValue, _.toByte, BigInt(_)),
-    Carrier[Short]("short", Monoid.short, Short.MinValue, Short.MaxValue, _.toShort, BigInt(_)),
-    Carrier[Int]("int", Monoid.int, Int.MinValue, Int.MaxValue, _.toInt, BigInt(_)),
-    Carrier[Long]("long", Monoid.long, Long.MinValue, Long.MaxValue, identity, BigInt(_)),
-    Carrier[Int]("u8", Monoid.u8, 0L, 255L, _.toInt, BigInt(_)),
-    Carrier[Int]("u16", Monoid.u16, 0L, 65535L, _.toInt, BigInt(_)),
-    Carrier[Long]("u32", Monoid.u32, 0L, 4294967295L, identity, BigInt(_)))
+    ranged("byte", Byte.MinValue, Byte.MaxValue),
+    ranged("short", Short.MinValue, Short.MaxValue),
+    ranged("int", Int.MinValue, Int.MaxValue),
+    ranged("long", Long.MinValue, Long.MaxValue),
+    ranged("u8", 0L, 255L),
+    ranged("u16", 0L, 65535L),
+    ranged("u32", 0L, 4294967295L),
+    Carrier("u64", Monoid.u64Fold, 0, maxU64, unsigned))
 
-  private def exactTable[T](c: Carrier[T], op: String): Unit =
+  private def exactTable(c: Carrier, op: String): Unit =
     test(s"table: ${c.name} $op is exact arithmetic clamped to [${c.lo}, ${c.hi}]") {
-      val m = c.m(op)
-      val (lo, hi) = (BigInt(c.lo), BigInt(c.hi))
+      val (mIdentity, mCombine) = c.m(op)
+      val (lo, hi) = (c.lo, c.hi)
       def exact(a: BigInt, b: BigInt): BigInt = {
         val v = op match {
           case "sum" => a + b
@@ -138,19 +160,24 @@ class MonoidLawsSpec extends AnyFunSuite {
         case "max" => lo
         case "min" => hi
       }
-      assert(c.big(m.identity) == identity)
-      assert(m.name == op)
+      assert(c.big(mIdentity) == identity)
       def agrees(a: Long, b: Long): Boolean =
-        c.big(m.combine(c.of(a), c.of(b))) == exact(BigInt(a), BigInt(b))
-      val specials = Seq(c.lo, c.hi, 0L, -1L, 1L, 2L).filter(v => v >= c.lo && v <= c.hi)
+        c.big(mCombine(a, b)) == exact(c.big(a), c.big(b))
+      // carrier values of lo, hi, 0, ±1, 2 and, for u64, 2^63 and 2^63 - 1
+      val specials = (Seq(lo, hi, BigInt(0), BigInt(-1), BigInt(1), BigInt(2)) ++
+          (if (c.name == "u64") Seq(BigInt(1) << 63, (BigInt(1) << 63) - 1) else Nil))
+        .filter(v => v >= lo && v <= hi).map(_.longValue)
       for (a <- specials; b <- specials)
-        assert(agrees(a, b), s"${c.name} $op($a, $b)")
-      val gen = Gen.oneOf(Gen.oneOf(specials), Gen.chooseNum(c.lo, c.hi))
+        assert(agrees(a, b), s"${c.name} $op(${c.big(a)}, ${c.big(b)})")
+      // u64: every Long bit pattern is a u64 value
+      val gen = Gen.oneOf(Gen.oneOf(specials),
+        if (c.name == "u64") Gen.chooseNum(Long.MinValue, Long.MaxValue)
+        else Gen.chooseNum(lo.longValue, hi.longValue))
       check(forAll(gen, gen)(agrees))
     }
   for (c <- carriers; op <- Monoid.ops) exactTable(c, op)
 
-  // --- float(op) folds in Double and rounds back: bit-identical to f32 ---
+  // --- floatFold(op) folds in Double and rounds back: bit-identical to f32 ---
   private def sameFloat(x: Float, y: Float): Boolean =
     if (x.isNaN) y.isNaN
     else java.lang.Float.floatToIntBits(x) == java.lang.Float.floatToIntBits(y)
@@ -161,7 +188,8 @@ class MonoidLawsSpec extends AnyFunSuite {
 
   for (op <- Monoid.ops)
     test(s"table: float $op is bit-identical to f32 arithmetic") {
-      val m = Monoid.float(op)
+      val combine = Monoid.floatFold(op)._2
+      def folded(a: Float, b: Float): Float = combine(a.toDouble, b.toDouble).toFloat
       val direct: (Float, Float) => Float = op match {
         case "sum" => _ + _
         case "product" => _ * _
@@ -169,7 +197,7 @@ class MonoidLawsSpec extends AnyFunSuite {
         case "min" => math.min
       }
       for (a <- floatSpecials; b <- floatSpecials)
-        assert(sameFloat(m.combine(a, b), direct(a, b)), s"$op($a, $b)")
+        assert(sameFloat(folded(a, b), direct(a, b)), s"$op($a, $b)")
       // random bit patterns; pairs whose exponents lie within 30 of each
       // other (a sum then rounds one into the other's mantissa); pairs of
       // moderate exponents (a product then lands in the normal or subnormal
@@ -185,7 +213,7 @@ class MonoidLawsSpec extends AnyFunSuite {
           case 1 => val x = bits(); (x, withExp(exp(x) + rnd.nextInt(61) - 30))
           case _ => (withExp(64 + rnd.nextInt(127)), withExp(64 + rnd.nextInt(127)))
         }
-        assert(sameFloat(m.combine(a, b), direct(a, b)), s"$op($a, $b)")
+        assert(sameFloat(folded(a, b), direct(a, b)), s"$op($a, $b)")
       }
     }
 }

@@ -19,8 +19,8 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.ArrayReduce.registerAll(s)
     graft.functions.ArrayReduceAgg.register(s)
+    graft.functions.ArrayMonoidReduce.register(s) // the test model
     graft.functions.SimHash.register(s)
     s
   }
