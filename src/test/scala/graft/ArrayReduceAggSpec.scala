@@ -19,7 +19,7 @@ class ArrayReduceAggSpec extends SparkSpec {
     spark.sql(q).collect()(0).getSeq[Any](0)
   }
 
-  test("native and Int32 default names equal the Aggregator model (int)") {
+  test("native sum/product/max/min equal the Aggregator family (int)") {
     Seq(Seq[Integer](1, 2, 3), Seq[Integer](4, null, 6), null)
       .toDF("arrays").createOrReplaceTempView("t_native")
     for (op <- Seq("sum", "product", "max", "min")) {
@@ -69,7 +69,7 @@ class ArrayReduceAggSpec extends SparkSpec {
   // minima use mixed-sign ints that never overflow, except slot 0, which
   // is positive so its saturation does not depend on merge order; the
   // product column stays in {-1, 1, 2} for the same reason.
-  test("wide arrays with null elements: engine equals the model across 4 partitions") {
+  test("wide arrays with null elements: tiers agree across 4 partitions") {
     val w = 512
     val rows = (0 until 64).map { i =>
       def isNull(j: Int) = (i * 31 + j) % 11 == 0
@@ -125,7 +125,7 @@ class ArrayReduceAggSpec extends SparkSpec {
   // fixes the fold order, which saturating sum/product depend on; both
   // tiers must equal the same row-order fold of exact arithmetic clamped
   // after every step.
-  test("native and typed names equal the Aggregator model at the byte and short bounds") {
+  test("native equals the Aggregator family at the byte and short bounds") {
     def check[T](suffix: String, lo: Long, hi: Long, rows: Seq[Seq[T]])(
         view: Seq[Seq[T]] => org.apache.spark.sql.DataFrame): Unit = {
       view(rows).coalesce(1).createOrReplaceTempView(s"t_bounds_$suffix")
@@ -269,7 +269,7 @@ class ArrayReduceAggSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions injects every array_reduce_* name at the standard " +
+  test("GraftExtensions injects the native aggregates at the standard " +
       "spark.sql.extensions seam") {
     import org.apache.spark.sql.SparkSessionExtensions
     import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -320,6 +320,22 @@ class ArrayReduceAggSpec extends SparkSpec {
       val ex = intercept[Exception](
         registry.lookupFunction(FunctionIdentifier(name), Seq.empty))
       assert(ex.getMessage.contains(name), ex.getMessage)
+    }
+  }
+
+  // max and min are exact in any width, so the f32 engine must equal the
+  // model's double fold of the same floats.
+  test("native matches Aggregator on real embeddings (floats in double fold ≈)") {
+    Tables.load(spark, sfDir)
+    for (op <- Seq("max", "min")) {
+      val rows = spark.sql(s"SELECT label, array_reduce_${op}_native(embedding), " +
+        s"model_array_reduce_${op}_double(CAST(embedding AS array<double>)) " +
+        "FROM embeddings GROUP BY label ORDER BY label").collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(r.getSeq[Float](1) == r.getSeq[Double](2).map(_.toFloat),
+          s"op=$op label=${r.get(0)}")
+      }
     }
   }
 
