@@ -28,14 +28,9 @@ object Bench {
     // is still caught: queries 1..calEvery map to the first post-query
     // probe, which is in this set. Denominator = the robust baseline
     // below, not the raw min.
-    val calRatio: Double = {
-      // guard: a filtered run (SPARK_GRAFT_ONLY matching zero queries)
-      // takes no post-query probe at all — an unguarded .max would throw
-      // and kill the bench before any record is written
-      val post = probes.filter(_._1 > 0).map(_._2)
-      if (post.isEmpty) 1.0
-      else post.max / math.max(Sweep.baseline(probes.map(_._2)), 1e-9)
-    }
+    val calRatio: Double =
+      probes.filter(_._1 > 0).map(_._2).max /
+        math.max(Sweep.baseline(probes.map(_._2)), 1e-9)
   }
 
   private[graft] object Sweep {
@@ -176,15 +171,11 @@ object Bench {
     }.sortBy(-_._3)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpuCount = cpus.toIntOption
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+  /** Bench's session: the shared harness confs (`SparkEntry.session`)
+    * plus one of its own, whole-stage codegen off.
+    */
+  private[graft] def session(cpus: String): SparkSession = {
+    val builder = SparkEntry.session(cpus)
       // Harness-mode codegen policy, chosen by measurement. This bench runs
       // 90+ distinct short queries in one JVM: whole-stage codegen makes
       // janino compile a fresh class per stage per query, and at sf0.1 that
@@ -205,6 +196,59 @@ object Bench {
     })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Untimed session warm-up: JVM/codegen/scheduler initialization and
+    * table registration should not be billed to whichever query happens
+    * to run first.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").count()
+    graft.sources.Tables.load(spark, sfDir)
+    // session-level table cache, LAZY on purpose: a 97-query session
+    // re-reads the same ~100 MB of parquet dozens of times, so caching
+    // the views is the standard session setup; with no eager count()
+    // the first query touching each table still pays the decode+cache
+    // materialization inside its measured time — nothing moves out of
+    // the billed total, later queries just stop re-decoding parquet
+    graft.sources.Tables.names.foreach(n => spark.table(n).cache())
+    spark.table("lineitem").limit(1000).count()
+  }
+
+  /** The family-boundary step, run untimed before a family's first query:
+    * release the previous families' operator persists, re-cache the base
+    * table views EAGERLY (a lazy .cache() would bill the family's first
+    * query the full parquet re-decode, conflating re-decode cost with the
+    * persist-release effect), then run the family's registered warm-up, so
+    * cross-family intermediates the clear dropped are re-materialized and
+    * the first query is billed its own work, not the clear's side effects.
+    * A warm-up that throws goes to `onWarmError`; the step carries on.
+    */
+  private[graft] def familyBoundary(spark: SparkSession, sfDir: String,
+      family: String)(onWarmError: Throwable => Unit): Unit = {
+    spark.catalog.clearCache()
+    graft.sources.Tables.names.foreach { n =>
+      spark.table(n).cache(); spark.table(n).count()
+    }
+    SparkEntry.familyWarm.get(family).foreach { w =>
+      try w(spark, sfDir) catch { case e: Throwable => onWarmError(e) }
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpuCount = cpus.toIntOption
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    // sorted order: hash-map iteration reshuffles whenever a query is added,
+    // which silently moves queries across the persist-accumulation/GC
+    // profile of the run and makes per-round numbers incomparable.
+    // SPARK_GRAFT_ONLY is a dev-only subset regex; recorded runs leave it
+    // unset and time the full registry
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+      .toSeq.sortBy(_._1)
+    val spark = session(cpus)
     // errors the bench survives (warm-ups); each goes to stderr at once and
     // into the detail file, so a broken warm-up cannot pass unseen
     val errors = scala.collection.mutable.ArrayBuffer[String]()
@@ -213,30 +257,12 @@ object Bench {
       System.err.println(s"BENCH error $msg")
       errors += msg
     }
-    // warm-up: JVM/codegen/scheduler initialization and table registration
-    // should not be billed to whichever query happens to run first
-    try {
-      spark.range(1000000L).selectExpr("sum(id)").count()
-      graft.sources.Tables.load(spark, sfDir)
-      // session-level table cache, LAZY on purpose: a 97-query session
-      // re-reads the same ~100 MB of parquet dozens of times, so caching
-      // the views is the standard session setup; with no eager count()
-      // the first query touching each table still pays the decode+cache
-      // materialization inside its measured time — nothing moves out of
-      // the billed total, later queries just stop re-decoding parquet
-      graft.sources.Tables.names.foreach(n => spark.table(n).cache())
-      spark.table("lineitem").limit(1000).count()
-    } catch { case e: Throwable => report("warm-up", e) }
+    try warmUp(spark, sfDir)
+    catch { case e: Throwable => report("warm-up", e) }
     // NOTE on intra-sweep caching: the dedup/similarity family builds
     // plan-identical persisted intermediates (shingle/bucket tables), and
     // Spark's cache-manager canonicalization shares one entry across
     // queries within a family.
-    // sorted order: hash-map iteration reshuffles whenever a query is added,
-    // which silently moves queries across the persist-accumulation/GC
-    // profile of the run and makes per-round numbers incomparable
-    // dev-only subset hook: regex over query names (unset under the driver,
-    // so recorded runs always time the full registry)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     // Every family boundary (since round 9) clears accumulated operator
     // persists: intra-family plan-identical sharing is preserved,
     // cross-family storage pressure released. Re-measured
@@ -299,70 +325,54 @@ object Bench {
       var qIdx = 0
       var probeSec = 0.0
       val s0 = System.nanoTime()
-      val raw = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-        .map { case (name, fn) =>
-          val family = name.split("_")(1)
-          if (family != lastFamily) {
-            val w0 = System.nanoTime()
-            // release operator persists from previous families; re-cache
-            // the base table views EAGERLY (a lazy .cache() would bill
-            // each family's first query the full parquet re-decode,
-            // conflating re-decode cost with the persist-release effect
-            // under test) — runs before this query's t0, outside timing.
-            // Likewise the family's registered warm-up: cross-family
-            // shared intermediates the clear dropped are re-materialized
-            // untimed, so the first query of a family is billed its own
-            // work, not the clear's side effects.
-            spark.catalog.clearCache()
-            graft.sources.Tables.names.foreach { n =>
-              spark.table(n).cache(); spark.table(n).count()
-            }
-            SparkEntry.familyWarm.get(family).foreach { w =>
-              try w(spark, sfDir)
-              catch { case e: Throwable => report(s"familyWarm $family (attempt $attempt)", e) }
-            }
-            warmSec += ((family, (System.nanoTime() - w0) / 1e9))
-          }
-          lastFamily = family
-          qIdx += 1
-          val t0 = System.nanoTime()
-          val err =
-            try { fn(spark, sfDir).count(); None }
-            catch { case e: Throwable => Some(describe(e)) }
-          val sec = (System.nanoTime() - t0) / 1e9
-          err.foreach(e => System.err.println(s"BENCH query $name FAILED: $e"))
-          // untimed: release this query's localCheckpoint blocks — they
-          // are RDD-level persists INVISIBLE to the family-boundary
-          // clearCache (checkpoints bypass CacheManager) and never shared
-          // across queries (each fn call creates fresh RDDs), so from
-          // here on they are dead storage. Without this they accumulate
-          // across the whole run: round 11's doubled graph family left
-          // enough blocks that the downstream multimodal queries read
-          // 3-7× their round-10 times with their code untouched, and the
-          // graph family's own later queries (betweenness) collapsed into
-          // sort spills. Blocking so the next query starts from
-          // actually-freed storage. CacheManager persists (the intra-
-          // family plan-identical sharing) are untouched.
-          graft.operators.Caching.releaseCheckpoints(blocking = true)
-          // probe taken AFTER the query it indexes (r9's ADVICE off-by-one:
-          // recording it before meant every calEvery-th query was assigned
-          // the PREVIOUS segment's load), so find(_._1 >= position) below
-          // really is "the nearest probe measured after this query ran".
-          // Heavy queries (raw > heavyProbeSec) additionally get their OWN
-          // immediate post-probe (VERDICT r10 item 5): a contention spike
-          // shorter than the 15-query segment otherwise lands on one
-          // heavy query's record unremarked (spam_mass read 10.0 s at
-          // factor 1.06 while same-code attempts read 7.3-8.9). ~10
-          // queries exceed the threshold → ~4 s of extra untimed probes,
-          // <2% of the sweep.
-          if (qIdx % calEvery == 0 || sec > heavyProbeSec) {
-            val p0 = System.nanoTime()
-            probes += ((qIdx, calibrate()))
-            probeSec += (System.nanoTime() - p0) / 1e9
-          }
-          (name, sec, err)
+      val raw = selected.map { case (name, fn) =>
+        val family = name.split("_")(1)
+        if (family != lastFamily) {
+          val w0 = System.nanoTime()
+          // runs before this query's t0, outside timing
+          familyBoundary(spark, sfDir, family)(
+            report(s"familyWarm $family (attempt $attempt)", _))
+          warmSec += ((family, (System.nanoTime() - w0) / 1e9))
         }
+        lastFamily = family
+        qIdx += 1
+        val t0 = System.nanoTime()
+        val err =
+          try { fn(spark, sfDir).count(); None }
+          catch { case e: Throwable => Some(describe(e)) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        err.foreach(e => System.err.println(s"BENCH query $name FAILED: $e"))
+        // untimed: release this query's localCheckpoint blocks — they
+        // are RDD-level persists INVISIBLE to the family-boundary
+        // clearCache (checkpoints bypass CacheManager) and never shared
+        // across queries (each fn call creates fresh RDDs), so from
+        // here on they are dead storage. Without this they accumulate
+        // across the whole run: round 11's doubled graph family left
+        // enough blocks that the downstream multimodal queries read
+        // 3-7× their round-10 times with their code untouched, and the
+        // graph family's own later queries (betweenness) collapsed into
+        // sort spills. Blocking so the next query starts from
+        // actually-freed storage. CacheManager persists (the intra-
+        // family plan-identical sharing) are untouched.
+        graft.operators.Caching.releaseCheckpoints(blocking = true)
+        // probe taken AFTER the query it indexes (r9's ADVICE off-by-one:
+        // recording it before meant every calEvery-th query was assigned
+        // the PREVIOUS segment's load), so find(_._1 >= position) below
+        // really is "the nearest probe measured after this query ran".
+        // Heavy queries (raw > heavyProbeSec) additionally get their OWN
+        // immediate post-probe (VERDICT r10 item 5): a contention spike
+        // shorter than the 15-query segment otherwise lands on one
+        // heavy query's record unremarked (spam_mass read 10.0 s at
+        // factor 1.06 while same-code attempts read 7.3-8.9). ~10
+        // queries exceed the threshold → ~4 s of extra untimed probes,
+        // <2% of the sweep.
+        if (qIdx % calEvery == 0 || sec > heavyProbeSec) {
+          val p0 = System.nanoTime()
+          probes += ((qIdx, calibrate()))
+          probeSec += (System.nanoTime() - p0) / 1e9
+        }
+        (name, sec, err)
+      }
       val session = (System.nanoTime() - s0) / 1e9 - probeSec
       val calPost = calibrate()
       if (probes.last._1 != qIdx) probes += ((qIdx, calPost))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions()(_))`)
+  * (or a session builder's `.withExtensions(new GraftExtensions()(_))`)
   * resolves the library's Catalyst-native SQL functions in every query,
   * SQL-only clients included — the Spark analogue of the reference
   * registering its UDAF with the SessionContext

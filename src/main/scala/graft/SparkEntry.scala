@@ -16,6 +16,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_array_sum_int")(spark, "/root/testdata/sf0.001")
 
+  /** The confs every harness shares (Bench, Verify, Probe, the tests):
+    * `local[cpus]`, one shuffle partition per core, UTC session time and no
+    * UI. A harness adds its own confs, then calls `getOrCreate()`.
+    */
+  def session(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+
+  /** The registered queries a harness runs: every one, or those whose name
+    * the `filter` regex finds (Bench and Verify pass `SPARK_GRAFT_ONLY`,
+    * e.g. `'^q_graph_'` or `'^q_x$'`). A filter that selects nothing is an
+    * error that names it, never a silent empty run.
+    */
+  def selected(filter: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    filter.fold(queries) { f =>
+      val re = f.r
+      val picked = queries.filter { case (n, _) => re.findFirstIn(n).isDefined }
+      require(picked.nonEmpty, s"query filter '$f' selects no registered query")
+      picked
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.MonoidQueries.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and failed.json
@@ -7,23 +6,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // Optional dev-loop filter, a regex over query names (see
+    // SparkEntry.selected). Gate runs leave it unset and dump every query.
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b runs a subset.
-    // The driver never sets it, so the gate always dumps every query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
     val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
     selected.foreach { case (name, fn) =>
       // marks the log: an executor error with no query name falls after
@@ -55,8 +44,9 @@ object Verify {
     } + "\""
     def obj(kvs: Iterable[(String, String)]): String =
       kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // only the dumped queries' SQL, so a filtered run compares clean
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      obj(SparkEntry.oracleSql))
+      obj(SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }))
     Files.writeString(Paths.get(s"$outDir/failed.json"),
       obj(failed.sortBy(_._1)))
     spark.stop()

@@ -742,7 +742,8 @@ object Dedup {
       // (u, pmod(xxhash64(v), salt)) and letting the distinct re-shuffle —
       // the elision is an optimization, never a correctness dependency
       // (checked on the 10× ScaleStress CC row: no single-partition
-      // straggler; see OPTIMIZATION_r15.md).
+      // straggler, OPTIMIZATION_r15.md; `Probe time` re-times the 1×/10×
+      // q_dedup_components and q_embed_dbscan pairs, PLANS.md 10× table).
       val large = sym.join(minsL, "src").where(col("dst") > col("src"))
         .select(col("dst").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))

@@ -116,7 +116,7 @@ object Graph {
     * nothing is collected).
     *
     * Truncation discipline (round-11 A/B, construct+count at sf0.1/32 in
-    * the Bench session config, as `Scratch10` times it): LAZY composition
+    * the Bench session config, as `Probe time` times it): LAZY composition
     * wins here, unlike BFS/SSSP/kCore. Those loops reference the previous
     * round's frame MORE THAN ONCE per round (BFS: anti-join + union), so
     * an untruncated tree re-executes shared subtrees combinatorially and
@@ -1102,7 +1102,7 @@ object Graph {
     * CHECKPOINTED per round (it feeds BOTH endpoint joins, and the flat
     * base measured faster than the r9 cadence of a checkpoint every k-th
     * round with persists between — round-10 construct+count A/B, as
-    * `Scratch10` times it: 2.1 vs 3.2 s warm; set
+    * `Probe time` times it: 2.1 vs 3.2 s warm; set
     * spark.graft.reliableCheckpoints on a cluster).
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
@@ -1346,7 +1346,7 @@ object Graph {
     * the standard Pregel expansion as DataFrame ops. The frontier is a
     * filter over the visited set (dist = level−1), so ONE frame carries
     * all loop state, and that frame is CHECKPOINTED every level: the
-    * round-10 A/B (construct+count as `Scratch10` times it, sf0.1/32,
+    * round-10 A/B (construct+count as `Probe time` times it, sf0.1/32,
     * warm) measured per-level checkpoint 1.8-2.0 s vs the r9 cadence of a
     * checkpoint every k-th level with persists between, 5.0-6.0 s — a
     * growing tree makes each persist's own planner pass cost more than a
@@ -1862,7 +1862,7 @@ object Graph {
     * distance table against the flat checkpointed edge table + one
     * min-aggregate; the distance table is referenced twice per round
     * (relax join + union) and CHECKPOINTED each round — measured best
-    * (round-10 construct+count A/B as `Scratch10` times it, warm: 1.8 s
+    * (round-10 construct+count A/B as `Probe time` times it, warm: 1.8 s
     * vs 2.8 s for a checkpoint every k-th round with persists between;
     * same finding as [[bfsDistances]]). Negative weights are not
     * validated (that would cost a scan): min-plus stays well-defined

@@ -676,8 +676,9 @@ object Similarity {
     * builds: a FIXED stride makes the assignment argmax n·centroids =
     * n²/stride and the partition-directory count linear in n (the
     * small-files trap) — sqrt(n) lists keep both the build and the
-    * directory count at n^1.5 / sqrt(n) (measured in `ScaleStress`; the
-    * gate entry keeps the oracle's fixed 50).
+    * directory count at n^1.5 / sqrt(n) (the 10× table in PLANS.md;
+    * `ScaleStress` at commit 06b3b10 reproduces it; the gate entry keeps
+    * the oracle's fixed 50).
     */
   def writeIvfIndex(df: DataFrame, idCol: String, vecCol: String,
       path: String, centroidEvery: Long = 50): DataFrame = {
@@ -1701,8 +1702,9 @@ object Similarity {
     * expected vectors per bucket: `ceil(log2(n / targetBucket))`, clamped
     * to [minBits, maxBits]. THE sizing rule that keeps bucket self-joins
     * linear — at fixed bits the pair count grows as 2^bits·(n/2^bits)² =
-    * n²/2^bits, i.e. quadratic in corpus size (measured 16× at 10× in
-    * ScaleStress); growing bits with log n holds expected bucket occupancy
+    * n²/2^bits, i.e. quadratic in corpus size (measured 16× at 10×: the
+    * 10× table in PLANS.md; `ScaleStress` at commit 06b3b10 reproduces
+    * it); growing bits with log n holds expected bucket occupancy
     * (and so pairs per vector) constant.
     */
   def sizeBits(n: Long, targetBucket: Long = 256L, minBits: Int = 4,
@@ -1716,8 +1718,9 @@ object Similarity {
   /** IVF sizing rule, the centroid-count analogue of [[sizeBits]]:
     * `centroidEvery = √n` gives k = √n cells, so assignment work n·k grows
     * as n^1.5 — a FIXED stride makes k a constant fraction of the corpus
-    * and assignment quadratic (measured 14× at 10× in ScaleStress; the
-    * sized run is the adjacent row). Probe count stays a tuning knob:
+    * and assignment quadratic (measured 14× at 10×, the sized run beside
+    * it: the 10× table in PLANS.md; `ScaleStress` at commit 06b3b10
+    * reproduces both). Probe count stays a tuning knob:
     * recall per probe falls as cells shrink, so nprobe grows ~√ too.
     */
   def sizeCentroidEvery(n: Long): Long =
@@ -2466,7 +2469,7 @@ object Similarity {
     // ONE checkpoint flattens the corpus-pass pair pipeline: every round's
     // planning otherwise re-optimizes the full explode+gram subtree, and
     // every per-round lazy checkpoint is a planner pass + eager AQE stage
-    // materialization (construct+count as `Scratch10` times it: this
+    // materialization (construct+count as `Probe time` times it: this
     // loop's 13 checkpoints measured 46 s of construction at sf0.1).
     // smat is dim² rows (tiny).
     val smat = Caching.checkpoint(upper.unionAll(

@@ -65,4 +65,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.regressionsFor(current, history.iterator, "/data/sf1", 32)
       .isEmpty)
   }
+
+  test("one regex selects the queries of every harness; an empty selection names its filter") {
+    assert(SparkEntry.selected(None).keySet == SparkEntry.queries.keySet)
+    val graph = SparkEntry.selected(Some("^q_graph_")).keySet
+    assert(graph.nonEmpty)
+    assert(graph == SparkEntry.queries.keySet.filter(_.startsWith("q_graph_")))
+    assert(SparkEntry.selected(Some("^q_array_sum_int$")).keySet ==
+      Set("q_array_sum_int"))
+    // a comma-separated name list is no filter form: it selects nothing
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q_array_sum_int,q_graph_hits")))
+    assert(e.getMessage.contains("'q_array_sum_int,q_graph_hits'"))
+  }
 }

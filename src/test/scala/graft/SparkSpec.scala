@@ -6,13 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+    val s = SparkEntry.session("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // fresh warehouse per JVM: the dir outlives the in-memory catalog, so
       // a fixed path collides with stale table locations on the next run
       .config("spark.sql.warehouse.dir",
